@@ -23,9 +23,17 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 
+def dot_fold(a: Column, b: Column) -> Column:
+    """JVM dot product as ONE left-to-right fold over the pairwise products —
+    the summation order the DuckDB oracle's list ops and the numpy kernels
+    below reproduce bit for bit; every JVM dot in the package is this
+    expression."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
 def cosine_expr(a: Column, b: Column) -> Column:
     """JVM cosine: deterministic sequential fold (oracle-parity path)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    dot = dot_fold(a, b)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
     return dot / (na * nb)
@@ -39,13 +47,6 @@ def cosine_pandas_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     dots = np.einsum("ij,ij->i", ma, mb)
     norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
     return pd.Series(dots / norms)
-
-
-@pandas_udf(DoubleType())
-def dot_pandas_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    ma = np.stack(a.to_numpy())
-    mb = np.stack(b.to_numpy())
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
 
 
 # ── sequential-order batch kernels (oracle-parity safe) ─────────────────────

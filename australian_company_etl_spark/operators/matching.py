@@ -11,6 +11,8 @@ Spark-first re-expression:
 - ``blocked_fuzzy_pairs`` — the 100 TB path: candidates are generated per
   blocking key (equi-join ⇒ shuffle hash/sort-merge, never cartesian), so
   cost is Σ|block|² instead of N·M and AQE splits skewed blocks.
+- ``score_once``          — the evaluate-once verify step every pairwise
+  join (fuzzy match, set-Jaccard dedup, embedding cosine) scores through.
 - ``first_wins``          — Postgres ``ON CONFLICT (key) DO NOTHING`` analog:
   keep the first row per key in a deterministic insertion order (window
   row_number, not dropDuplicates which is order-nondeterministic).
@@ -98,4 +100,23 @@ def blocked_fuzzy_pairs(
         score = lev_ratio_spark(F.col(left_name), F.col(right_name))
     spread = spread_if_narrow(right)
     joined = left.join(spread, on=block_cols)
-    return joined.withColumn("score", score).filter(F.col("score") >= threshold)
+    return score_once(joined, score, "score").filter(F.col("score") >= threshold)
+
+
+def score_once(df: DataFrame, score: Column, name: str) -> DataFrame:
+    """``df`` plus column ``name`` = ``score``, evaluated ONCE per row — the
+    verify step of every pairwise join (candidate pairs → score → keep).
+
+    Without a barrier, a threshold filter on a deterministic score collapses
+    into the candidate join's condition, and Catalyst has no common-
+    subexpression elimination across the condition and the output
+    projection: each surviving pair pays the scorer twice (three times when
+    the filter names the score twice). So the score is computed in a
+    projection and ``explode(array(<that attribute>))`` is put over it. A
+    predicate on generator output cannot be pushed below the Generate, so
+    the join emits every candidate and the filter and output reuse the one
+    attribute; because the score sits in an ordinary projection rather than
+    inside the generator expression, codegen's subexpression elimination
+    still applies within it."""
+    scored = df.select("*", score.alias(name))
+    return scored.select(*df.columns, F.explode(F.array(name)).alias(name))

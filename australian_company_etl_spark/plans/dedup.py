@@ -39,7 +39,10 @@ from australian_company_etl_spark.functions.textfns import (
     tokens_all_spark,
     tokens_all_sql,
 )
+from australian_company_etl_spark.functions.vectors import dot_fold
 from australian_company_etl_spark.operators.cache import persist_tracked
+from australian_company_etl_spark.operators.matching import score_once
+from australian_company_etl_spark.plans.similarity import _base
 from australian_company_etl_spark.sources.registry import load_tables
 
 SHINGLE_K = 3
@@ -125,6 +128,20 @@ def _jaccard_spark(a, b):
 def _jaccard_sql(a: str, b: str) -> str:
     inter = f"len(list_intersect({a}, {b}))"
     return f"({inter}::DOUBLE / (len({a}) + len({b}) - {inter}))"
+
+
+def _jaccard_verify(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """The F2/F4/F12 verify: (id_a, id_b, jaccard) for the candidate pairs
+    whose Jaccard of the ``sh_a``/``sh_b`` sets, rounded to 4 dp, reaches
+    JACCARD_T — one intersect per candidate (``score_once``)."""
+    sized = pairs.select(
+        id_a, id_b, "sh_a", "sh_b", F.size("sh_a").alias("la"), F.size("sh_b").alias("lb")
+    )
+    once = score_once(sized, F.size(F.array_intersect("sh_a", "sh_b")), "inter")
+    jac = F.col("inter") / (F.col("la") + F.col("lb") - F.col("inter"))
+    return once.select(id_a, id_b, F.round(jac, 4).alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_T
+    )
 
 
 # ── F1 exact ────────────────────────────────────────────────────────────────
@@ -236,31 +253,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _band_candidates(bands)
     sa = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    # r13 (guide §1.2/§7.2): the τ filter used to collapse into the verify
-    # JOIN CONDITION with `size(array_intersect)` textually duplicated —
-    # Catalyst has no CSE inside one condition/projection tree, so every
-    # candidate row paid 3 full O(|a|+|b|) intersects (r12 plan dump,
-    # dedup_minhash_lsh_before.txt:230-233). The explode(array(inter))
-    # generator is an evaluate-once barrier: predicates referencing
-    # generator output cannot be pushed below the Generate, so the
-    # intersect runs exactly once per row and both the filter and the
-    # output reuse the attribute. Interleaved sf10 A/B: 8.5 → 6.0 s.
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    once = (
-        cand.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.size("sh_a").alias("la"),
-            F.size("sh_b").alias("lb"),
-            F.explode(F.array(inter)).alias("inter"),
-        )
-    )
-    jac = F.col("inter") / (F.col("la") + F.col("lb") - F.col("inter"))
-    return once.select(
-        "doc_id_a", "doc_id_b", F.round(jac, 4).alias("jaccard")
-    ).filter(F.col("jaccard") >= JACCARD_T)
+    pairs = cand.join(sa, "doc_id_a").join(sb, "doc_id_b")
+    return _jaccard_verify(pairs, "doc_id_a", "doc_id_b")
 
 
 def _minhash_pairs_body() -> str:
@@ -297,10 +291,6 @@ JOIN hsets sa ON sa.doc_id = cand.doc_id_a
 JOIN hsets sb ON sb.doc_id = cand.doc_id_b
 WHERE round({jac}, 4) >= {JACCARD_T}
 """
-
-
-def _minhash_sql() -> str:
-    return _minhash_pairs_body()
 
 
 # ── F3 simhash ──────────────────────────────────────────────────────────────
@@ -475,10 +465,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(sa, sb).cast("bigint") * 10000
         >= F.greatest(sa, sb).cast("bigint") * 1999
     )
-    # r13: evaluate-once generator barrier for the intersect (see
-    # dedup_minhash_lsh — same 3-intersects-per-row collapse, same fix)
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    once = a.join(
+    pairs = a.join(
         b,
         (F.col("a.blk") == F.col("b.blk"))
         & (F.col("a.bkt") == F.col("b.bkt"))
@@ -487,14 +474,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.doc_id").alias("doc_id_a"),
         F.col("b.doc_id").alias("doc_id_b"),
-        sa.alias("la"),
-        sb.alias("lb"),
-        F.explode(F.array(inter)).alias("inter"),
+        F.col("a.sh").alias("sh_a"),
+        F.col("b.sh").alias("sh_b"),
     )
-    jac_once = F.col("inter") / (F.col("la") + F.col("lb") - F.col("inter"))
-    return once.select(
-        "doc_id_a", "doc_id_b", F.round(jac_once, 4).alias("jaccard")
-    ).filter(F.col("jaccard") >= JACCARD_T)
+    return _jaccard_verify(pairs, "doc_id_a", "doc_id_b")
 
 
 def _ngram_sql() -> str:
@@ -515,46 +498,25 @@ WHERE round({jac}, 4) >= {JACCARD_T}
 # ── F5 embedding cosine near-dup ────────────────────────────────────────────
 
 
-def _dot_spark(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 — label-blocked embedding near-dup pairs, cosine ≥ 0.25.
 
     Vectors are L2-normalized once per row so the per-pair score is a
-    single dot product (see plans/similarity.py for the parity argument)."""
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    # spread the interpreted per-row folds (tiny file = one scan partition)
-    emb = spread_if_narrow(emb, "vec_id")
-    e = F.col("embedding").cast("array<double>")
-    d = emb.select("vec_id", "label", e.alias("e0")).withColumn(
-        "nrm", F.sqrt(_dot_spark(F.col("e0"), F.col("e0")))
-    )
-    # zero-norm → NULL normalized vector (no direction): cosines against it
-    # are NULL and never cross the threshold — see plans/similarity.py
-    # _base for the full policy (ANSI DIVIDE_BY_ZERO vs IEEE NaN otherwise)
-    base = d.select(
-        "vec_id",
-        "label",
-        F.when(
-            F.col("nrm") > 0, F.transform("e0", lambda x: x / F.col("nrm"))
-        ).alias("e"),
-    )
+    single dot product (see plans/similarity.py for the parity argument);
+    a zero-norm vector's cosines are NULL and never cross the threshold
+    (the ``_base`` policy)."""
+    base = _base(spark, sf_dir)
     a, b = base.alias("a"), base.alias("b")
-    cos = _dot_spark(F.col("a.e"), F.col("b.e"))
-    # r13: evaluate-once generator barrier for the interpreted 64-dim fold
-    # (the τ filter used to collapse into the join condition — the r12 plan
-    # dump shows the fold in the condition AND the projection, 2-3
-    # evaluations per candidate pair; same fix as dedup_minhash_lsh)
-    once = a.join(
+    pairs = a.join(
         b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id"))
     ).select(
         F.col("a.vec_id").alias("vec_id_a"),
         F.col("b.vec_id").alias("vec_id_b"),
         F.col("a.label").alias("label"),
-        F.explode(F.array(cos)).alias("cos"),
+        F.col("a.e").alias("ea"),
+        F.col("b.e").alias("eb"),
     )
+    once = score_once(pairs, dot_fold(F.col("ea"), F.col("eb")), "cos")
     return once.select(
         "vec_id_a",
         "vec_id_b",
@@ -1262,29 +1224,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sh.select(F.col("doc_id").alias("lo"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("hi"), F.col("sh").alias("sh_b"))
-    # r13: evaluate-once generator barrier for the intersect (the τ filter
-    # used to collapse into the verify join condition with the intersect
-    # duplicated — see dedup_minhash_lsh), and vp PERSISTED: it feeds the
-    # two qual branches plus the best_match join-back, which re-ran the
-    # whole candidate+verify pipeline per reference (guide §1.2).
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    once = (
-        cand.join(sa, "lo")
-        .join(sb, "hi")
-        .select(
-            "lo",
-            "hi",
-            F.size("sh_a").alias("la"),
-            F.size("sh_b").alias("lb"),
-            F.explode(F.array(inter)).alias("inter"),
-        )
-    )
-    jac = F.col("inter") / (F.col("la") + F.col("lb") - F.col("inter"))
-    vp = persist_tracked(
-        once.select("lo", "hi", F.round(jac, 4).alias("jaccard")).filter(
-            F.col("jaccard") >= JACCARD_T
-        )
-    )
+    # vp PERSISTED: it feeds the two qual branches plus the best_match
+    # join-back, which re-ran the whole candidate+verify pipeline per
+    # reference (guide §1.2).
+    vp = persist_tracked(_jaccard_verify(cand.join(sa, "lo").join(sb, "hi"), "lo", "hi"))
     # qualifying (new_doc, partner): the partner is existing (any id) or an
     # earlier new doc; pairs are (lo < hi) so a new hi always qualifies
     # against lo, and a new lo only against an EXISTING hi.
@@ -1600,24 +1543,14 @@ def dedup_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     else:
         sa, sb = sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    pairs = cands.join(sa, "doc_id_a").join(sb, "doc_id_b")
     return (
-        cands.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        # r13 (guide §7.2): DEN·i ≥ NUM·(na+nb−i) ⇔ (NUM+DEN)·i ≥
-        # NUM·(na+nb) — exact integers both sides, but the left form names
-        # `inter` TWICE and Catalyst duplicated the O(na+nb) intersect
-        # inside the collapsed join condition (r12 plan dump line 335: two
-        # array_intersect calls per candidate row, a third in the output
-        # projection). The single-use form pays exactly one intersect on
-        # the hot path. Interleaved sf10 A/B: 35.5 → 32.6 s (and a
-        # generator-barrier variant measured equal — the algebra needs no
-        # plan hack; scripts/verify_ab_r13.py).
+        score_once(pairs, F.size(F.array_intersect("sh_a", "sh_b")), "inter")
+        # DEN·i ≥ NUM·(na+nb−i) ⇔ (NUM+DEN)·i ≥ NUM·(na+nb): exact integers
         .filter(
-            (SETSIM_NUM + SETSIM_DEN) * inter
+            (SETSIM_NUM + SETSIM_DEN) * F.col("inter")
             >= SETSIM_NUM * (F.col("na") + F.col("nb"))
         )
-        .withColumn("inter", inter)
         .select(
             "doc_id_a",
             "doc_id_b",
@@ -1694,7 +1627,7 @@ QUERIES = {
 ORACLES = {
     "dedup_exact": DEDUP_EXACT_SQL,
     "dedup_url_canonical": DEDUP_URL_SQL,
-    "dedup_minhash_lsh": _minhash_sql(),
+    "dedup_minhash_lsh": _minhash_pairs_body(),
     "dedup_simhash": _simhash_sql(),
     "dedup_ngram_jaccard": _ngram_sql(),
     "dedup_embedding_cosine": _emb_cosine_sql(),

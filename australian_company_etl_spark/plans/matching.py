@@ -34,6 +34,7 @@ from australian_company_etl_spark.functions.textfns import (
 from australian_company_etl_spark.operators.matching import (
     best_fuzzy_match,
     blocked_fuzzy_pairs,
+    score_once,
 )
 from australian_company_etl_spark.functions.exactmath import sum_cents, sum_cents_sql
 from australian_company_etl_spark.functions.partitioning import spread_if_narrow
@@ -194,17 +195,15 @@ def match_multi_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_name",
         "c",
     )
-    spread = spread_if_narrow(right)
     t0, t1, t2 = token_set_strings_spark(F.col("s_tk"), F.col("c_tk"))
+    scores = F.struct(
+        lev_ratio_spark(F.col("s_norm"), F.col("c_norm")).alias("ratio_score"),
+        lev_ratio_spark(F.col("s_ts"), F.col("c_ts")).alias("token_sort_score"),
+        token_set_ratio_spark(t0, t1, t2).alias("token_set_score"),
+    )
     return (
-        left.join(spread, "nationkey")
-        .select(
-            "s_suppkey",
-            "c_custkey",
-            lev_ratio_spark(F.col("s_norm"), F.col("c_norm")).alias("ratio_score"),
-            lev_ratio_spark(F.col("s_ts"), F.col("c_ts")).alias("token_sort_score"),
-            token_set_ratio_spark(t0, t1, t2).alias("token_set_score"),
-        )
+        score_once(left.join(spread_if_narrow(right), "nationkey"), scores, "sc")
+        .select("s_suppkey", "c_custkey", "sc.*")
         .withColumn(
             "best_score",
             F.greatest("ratio_score", "token_sort_score", "token_set_score"),
@@ -247,19 +246,10 @@ def match_keyword_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = base.select(F.col("name").alias("name_a"), F.col("toks").alias("toks_a"), "block")
     b = base.select(F.col("name").alias("name_b"), F.col("toks").alias("toks_b"), "block")
-    # r13: evaluate-once generator barrier — the threshold filter used to
-    # collapse into the block join's condition with jaccard_pct's
-    # array_intersect duplicated per candidate row (see dedup_minhash_lsh)
+    pairs = a.join(b, "block").filter(F.col("name_a") < F.col("name_b"))
     return (
-        a.join(b, "block")
-        .filter(F.col("name_a") < F.col("name_b"))
-        .select(
-            "name_a",
-            "name_b",
-            F.explode(
-                F.array(jaccard_pct_spark(F.col("toks_a"), F.col("toks_b")))
-            ).alias("jaccard_pct"),
-        )
+        score_once(pairs, jaccard_pct_spark(F.col("toks_a"), F.col("toks_b")), "jaccard_pct")
+        .select("name_a", "name_b", "jaccard_pct")
         .filter(F.col("jaccard_pct") >= JACCARD_THRESHOLD)
     )
 

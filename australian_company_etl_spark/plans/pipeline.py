@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from australian_company_etl_spark.plans.dedup import _minhash_sql, dedup_minhash_lsh
+from australian_company_etl_spark.plans.dedup import _minhash_pairs_body, dedup_minhash_lsh
 from australian_company_etl_spark.plans.text import _quality_sql, text_quality_score
 
 QUALITY_T = 0.35
@@ -50,7 +50,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _curate_sql() -> str:
     return f"""
 WITH qual AS (SELECT * FROM ({_quality_sql()}) q WHERE quality >= {QUALITY_T}),
-kill AS (SELECT DISTINCT doc_id_b AS doc_id FROM ({_minhash_sql()}) p
+kill AS (SELECT DISTINCT doc_id_b AS doc_id FROM ({_minhash_pairs_body()}) p
          WHERE jaccard >= {STRONG_DUP_T})
 SELECT doc_id, n_tokens, quality
 FROM qual

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from australian_company_etl_spark.functions.exactmath import D38 as _PI_D38
 from australian_company_etl_spark.functions.partitioning import spread_if_narrow
-from australian_company_etl_spark.functions.vectors import seq_dot_cross
+from australian_company_etl_spark.functions.vectors import dot_fold, seq_dot_cross
 from australian_company_etl_spark.functions.textfns import phash_sql
 from australian_company_etl_spark.sources.registry import load_tables
 
@@ -70,17 +70,9 @@ PLANE_TABLES = [[_plane(p, t) for p in range(N_PLANES)] for t in range(N_TABLES)
 # ── cosine, both dialects (double, sequential fold) ─────────────────────────
 # Vectors are L2-normalized ONCE per row (O(N·dim)) so every pair score is a
 # single dot product (O(pairs·dim)) instead of dot + two norms — 3x less
-# per-pair work, and Spark's sequential fold matches DuckDB's list ops
-# bit-for-bit because both evaluate left-to-right on the same doubles.
-
-
-def _dot_spark(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _cos_spark(a, b):
-    """Dot of pre-normalized vectors == cosine."""
-    return _dot_spark(a, b)
+# per-pair work, and Spark's sequential fold (``dot_fold``) matches DuckDB's
+# list ops bit-for-bit because both evaluate left-to-right on the same
+# doubles.
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -103,7 +95,7 @@ def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raises DIVIDE_BY_ZERO on x/0 while DuckDB's IEEE division produces
     # NaN — an engine crash vs silent NaNs, the worst possible pair.
     d = emb.select("vec_id", "label", e.alias("e0")).withColumn(
-        "nrm", F.sqrt(_dot_spark(F.col("e0"), F.col("e0")))
+        "nrm", F.sqrt(dot_fold(F.col("e0"), F.col("e0")))
     )
     return d.select(
         "vec_id",
@@ -121,6 +113,16 @@ _BASE_SQL = """base AS (
                sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
         FROM embeddings) t
 )"""
+
+
+def _rescore(pairs: DataFrame) -> DataFrame:
+    """(q_id, n_id, score) per candidate: the exact cosine of query ``qe``
+    and corpus vector ``e``, rounded to 6 dp before any ranking."""
+    return pairs.select(
+        "q_id",
+        F.col("vec_id").alias("n_id"),
+        F.round(dot_fold(F.col("qe"), F.col("e")), 6).alias("score"),
+    )
 
 
 def _topk(pairs: DataFrame) -> DataFrame:
@@ -150,12 +152,7 @@ def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
     )
-    pairs = base.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-    )
-    return _topk(pairs)
+    return _topk(_rescore(base.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))))
 
 
 BRUTE_SQL = f"""
@@ -175,10 +172,7 @@ scored AS (
 def _bucket_spark(e, planes: list[list[float]] | None = None):
     bucket = F.lit(0)
     for p, plane in enumerate(planes if planes is not None else PLANES):
-        lits = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(e, lits, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
+        dot = dot_fold(e, F.array(*[F.lit(float(x)) for x in plane]))
         bucket = bucket + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket.cast("int")
 
@@ -196,37 +190,47 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registry entry = the frozen 8-plane parity twin; the library default
     for a growing corpus is ``ann_lsh_topk_adaptive`` (same plan, plane
     count from ``adaptive_n_planes``)."""
-    return ann_lsh_topk_planes(spark, sf_dir, planes=PLANES)
+    return ann_lsh_topk_probed(spark, sf_dir, PLANES)
 
 
-def ann_lsh_topk_planes(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
+def ann_lsh_topk_probed(
+    spark: SparkSession,
+    sf_dir: str,
+    planes: list[list[float]] | None = None,
+    n_probes: int = 0,
 ) -> DataFrame:
-    """G2 with a parameterized plane set — the scale lever shared with G8
-    (more planes → smaller buckets → bounded per-query candidate sets)."""
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), planes))
+    """The one sign-LSH query path (G2, G11 and their adaptive defaults):
+    each query's candidates share its bucket or one of its probe buckets
+    (``_probe_flips``), exact-rescored to top-k. The plane set is the
+    scale lever shared with G8 (more planes → smaller buckets → bounded
+    per-query candidate sets). n_probes=0 is the single-bucket G2 plan;
+    n_probes=len(planes) probes the whole Hamming-1 ball (G11). A query's
+    probe masks are distinct, so a candidate matches it at most once — no
+    pair dedup stage."""
+    plist = PLANES if planes is None else planes
+    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), plist))
     q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("bucket").alias("qb")
     )
+    key = F.col("qb")
+    if n_probes > 0:
+        flips = _probe_flips(F.col("qe"), plist, n_probes)
+        q = q.select("q_id", "qe", "qb", F.explode(flips).alias("flip")).select(
+            "q_id", "qe", F.col("qb").bitwiseXOR(F.col("flip")).alias("pb")
+        )
+        key = F.col("pb")
     pairs = base.join(
-        F.broadcast(q), (F.col("bucket") == F.col("qb")) & (F.col("vec_id") != F.col("q_id"))
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
+        F.broadcast(q), (F.col("bucket") == key) & (F.col("vec_id") != F.col("q_id"))
     )
-    return _topk(pairs)
+    return _topk(_rescore(pairs))
 
 
-def ann_lsh_topk_adaptive(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int | None = None
-) -> DataFrame:
+def ann_lsh_topk_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2 library default: plane count derived from the corpus (see
     ``adaptive_n_planes``) paired with the matching query-directed probe
     budget (``adaptive_probe_budget`` — zero at the parity floor, so this
     is identical to the parity twin below the adaptive threshold)."""
-    tbs = TARGET_BUCKET_SIZE if target_bucket_size is None else target_bucket_size
-    planes = corpus_adaptive_planes(spark, sf_dir, tbs)
+    planes = corpus_adaptive_planes(spark, sf_dir)
     return ann_lsh_topk_probed(
         spark, sf_dir, planes, n_probes=adaptive_probe_budget(len(planes))
     )
@@ -260,7 +264,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "e",
         "c_id",
-        F.round(_cos_spark(F.col("e"), F.col("ce")), 6).alias("cscore"),
+        F.round(dot_fold(F.col("e"), F.col("ce")), 6).alias("cscore"),
     )
     wa = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("c_id"))
     assigned = scored.withColumn("rn", F.row_number().over(wa)).filter(F.col("rn") == 1).select(
@@ -280,14 +284,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.join(F.broadcast(qprobe), "cell")
         .join(F.broadcast(q), "q_id")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-        )
-        .distinct()
     )
-    return _topk(pairs)
+    return _topk(_rescore(pairs).distinct())
 
 
 def _ivf_sql() -> str:
@@ -334,8 +332,8 @@ scored AS (
 # Scale: centroids are a broadcast dim (K rows); each iteration is one
 # corpus pass + one K×DIM-sized aggregate — the canonical distributed-kmeans
 # shape. The per-pair fold is an interpreted HOF here (fine for K·N·DIM at
-# this K); swap in the vectorized pandas-UDF dot (functions/vectors.py) for
-# wide production runs.
+# this K); swap in an Arrow-batched kernel (functions/vectors.py) for wide
+# production runs.
 
 KMEANS_K = 8
 KMEANS_ITERS = 2
@@ -507,7 +505,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = (
         a.join(b, "cluster_id")
         .filter(F.col("va") < F.col("vb"))
-        .filter(F.round(_cos_spark(F.col("ea"), F.col("eb")), 4) >= SEM_T)
+        .filter(F.round(dot_fold(F.col("ea"), F.col("eb")), 4) >= SEM_T)
         .select("vb")
         .distinct()
     )
@@ -569,7 +567,7 @@ def _pq_parts(spark: SparkSession, sf_dir: str):
 
 
 def _d2(a, b):
-    return _dot_spark(a, a) + _dot_spark(b, b) - 2 * _dot_spark(a, b)
+    return dot_fold(a, a) + dot_fold(b, b) - 2 * dot_fold(a, b)
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -972,7 +970,7 @@ def knn_graph_lsh_planes_fold(
     pairs = lhs.join(rhs, "bucket").filter(F.col("src_id") != F.col("nbr_id")).select(
         "src_id",
         "nbr_id",
-        F.round(_cos_spark(F.col("se"), F.col("ne")), 6).alias("score"),
+        F.round(dot_fold(F.col("se"), F.col("ne")), 6).alias("score"),
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("nbr_id"))
     return (
@@ -1016,20 +1014,16 @@ def adaptive_n_planes(n_rows: int, target_bucket_size: int = TARGET_BUCKET_SIZE)
     return max(N_PLANES, min(MAX_PLANES, math.ceil(math.log2(max(1.0, n_rows / target_bucket_size)))))
 
 
-def corpus_adaptive_planes(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int = TARGET_BUCKET_SIZE
-) -> list[list[float]]:
+def corpus_adaptive_planes(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The adaptive plane set for a corpus: one cheap count aggregate
     (parquet row-group metadata — no column read) → deterministic planes.
     A deployment with a stats manifest passes the known count straight to
     ``adaptive_n_planes`` and skips even that."""
     n = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].count()
-    return knn_planes(adaptive_n_planes(n, target_bucket_size))
+    return knn_planes(adaptive_n_planes(n))
 
 
-def knn_graph_lsh_adaptive(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int = TARGET_BUCKET_SIZE
-) -> DataFrame:
+def knn_graph_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8, the LIBRARY DEFAULT entry point: k-NN graph with the plane
     count derived from the corpus (adaptive_n_planes) — so Σ|bucket|²
     stays bounded as the corpus grows — AND, from round 12, the recall
@@ -1044,7 +1038,7 @@ def knn_graph_lsh_adaptive(
     corpus); at the small gate SFs the adaptive default produces an
     identical graph because the formula floors at the parity count where
     the probe budget is zero."""
-    planes = corpus_adaptive_planes(spark, sf_dir, target_bucket_size)
+    planes = corpus_adaptive_planes(spark, sf_dir)
     return knn_graph_lsh_probed(
         spark, sf_dir, planes=planes, n_probes=adaptive_probe_budget(len(planes))
     )
@@ -1113,44 +1107,14 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — same plan shape as G2, wider probe dim. Registry entry = the
     frozen 8-plane parity twin; ``ann_lsh_multiprobe_adaptive`` derives
     the plane count from the corpus."""
-    return ann_lsh_multiprobe_planes(spark, sf_dir, planes=PLANES)
+    return ann_lsh_topk_probed(spark, sf_dir, PLANES, n_probes=N_PLANES)
 
 
-def ann_lsh_multiprobe_planes(
-    spark: SparkSession, sf_dir: str, planes: list[list[float]] | None = None
-) -> DataFrame:
-    """G11 with a parameterized plane set (probe count tracks the plane
-    count: own bucket + one flip per plane)."""
-    plist = PLANES if planes is None else planes
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), plist))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("bucket").alias("qb")
-    )
-    flips = F.array(*([F.lit(0)] + [F.lit(1 << p) for p in range(len(plist))]))
-    probes = (
-        q.select("q_id", "qe", "qb", F.explode(flips).alias("flip"))
-        .select("q_id", "qe", (F.col("qb").bitwiseXOR(F.col("flip"))).alias("pb"))
-    )
-    pairs = base.join(
-        F.broadcast(probes),
-        (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-    ).distinct()
-    return _topk(pairs)
-
-
-def ann_lsh_multiprobe_adaptive(
-    spark: SparkSession, sf_dir: str, target_bucket_size: int | None = None
-) -> DataFrame:
+def ann_lsh_multiprobe_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G11 library default: plane count derived from the corpus (see
-    ``adaptive_n_planes``)."""
-    tbs = TARGET_BUCKET_SIZE if target_bucket_size is None else target_bucket_size
-    return ann_lsh_multiprobe_planes(
-        spark, sf_dir, corpus_adaptive_planes(spark, sf_dir, tbs)
-    )
+    ``adaptive_n_planes``), every Hamming-1 bucket probed."""
+    planes = corpus_adaptive_planes(spark, sf_dir)
+    return ann_lsh_topk_probed(spark, sf_dir, planes, n_probes=len(planes))
 
 
 def lsh_recall_planes(
@@ -1162,16 +1126,9 @@ def lsh_recall_planes(
     savings (VERDICT r10 task 1: more planes = smaller buckets = fewer
     candidates, but also fewer true neighbors sharing the query's bucket).
     Returns exact integers: Σ hits over Σ k across the query set."""
-    brute = ann_brute_topk(spark, sf_dir).select("q_id", "n_id")
-    approx = ann_lsh_topk_planes(spark, sf_dir, planes).select("q_id", "n_id")
-    hits = brute.join(approx, ["q_id", "n_id"]).count()
-    total = brute.count()
-    return {
-        "n_planes": len(planes) if planes is not None else N_PLANES,
-        "hits": int(hits),
-        "total": int(total),
-        "recall_pct": round(100.0 * hits / total, 1) if total else 0.0,
-    }
+    out = lsh_recall_probed(spark, sf_dir, planes, 0)
+    del out["n_probes"]
+    return out
 
 
 # ── query-directed probing (Lv et al., VLDB'07) — the adaptive default's
@@ -1208,15 +1165,7 @@ def adaptive_probe_budget(n_planes: int) -> int:
 
 def _plane_dots(e, planes: list[list[float]]):
     """array<double> of the per-plane dots — ONE O(planes·dim) fold pass."""
-    dots = []
-    for plane in planes:
-        lits = F.array(*[F.lit(float(x)) for x in plane])
-        dots.append(
-            F.aggregate(
-                F.zip_with(e, lits, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-            )
-        )
-    return F.array(*dots)
+    return F.array(*[dot_fold(e, F.array(*[F.lit(float(x)) for x in p])) for p in planes])
 
 
 def _bucket_from_dots(ds, n_planes: int):
@@ -1267,16 +1216,30 @@ def _keys_with_probes(e, planes: list[list[float]], n_probes: int):
     (smallest |dot| first; plane index breaks exact ties).
 
     NOTE: as one inline expression this evaluates the plane dots several
-    times (bucket + margins + per-probe lambda) — fine for the tiny query
-    sets it is applied to (G2/G11 probes, stats instrumentation). The
-    corpus-sized knn_graph_lsh_probed lhs instead materializes dots/
-    bucket/margins as columns below the explode (see there)."""
+    times (bucket + margins + per-probe lambda) — fine for the stats
+    instrumentation it is applied to. The corpus-sized
+    knn_graph_lsh_probed lhs instead materializes dots/bucket/margins as
+    columns below the explode (see there)."""
     ds = _plane_dots(e, planes)
     bucket = _bucket_from_dots(ds, len(planes))
     if n_probes <= 0:
         return F.array(bucket)
     margins = _margins_from_dots(ds, len(planes))
     return _keys_from(bucket, margins, n_probes)
+
+
+def _probe_flips(e, planes: list[list[float]], n_probes: int):
+    """XOR masks of the buckets a query vector ``e`` probes: 0 (its own
+    bucket), then the bits of its n_probes least-confident planes
+    (smallest |dot| first, the ``_keys_with_probes`` order) — or, once
+    n_probes covers every plane, all bits as literals: the whole Hamming-1
+    ball needs no margins. The masks are distinct."""
+    if n_probes >= len(planes):
+        return F.array(*([F.lit(0)] + [F.lit(1 << p) for p in range(len(planes))]))
+    margins = _margins_from_dots(_plane_dots(e, planes), len(planes))
+    return F.concat(
+        F.array(F.lit(0)), F.transform(F.slice(margins, 1, n_probes), lambda s: s["bit"])
+    )
 
 
 def knn_graph_lsh_probed(
@@ -1332,34 +1295,6 @@ def knn_graph_lsh_probed(
         F.col("b0").alias("bucket"),
     )
     return _knn_topk_from_buckets(lhs, rhs)
-
-
-def ann_lsh_topk_probed(
-    spark: SparkSession,
-    sf_dir: str,
-    planes: list[list[float]] | None = None,
-    n_probes: int = 0,
-) -> DataFrame:
-    """G2 with query-directed probing (the query set probes its own bucket
-    + its n_probes least-confident flips). n_probes=0 ≡ the bare plan."""
-    plist = PLANES if planes is None else planes
-    if n_probes <= 0:
-        return ann_lsh_topk_planes(spark, sf_dir, plist)
-    base = _base(spark, sf_dir).withColumn("bucket", _bucket_spark(F.col("e"), plist))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.explode(_keys_with_probes(F.col("e"), plist, n_probes)).alias("pb"),
-    )
-    pairs = base.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("q_id")),
-    ).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
-    )
-    return _topk(pairs)
 
 
 def knn_candidate_stats_probed(
@@ -1465,13 +1400,11 @@ def ann_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = None
     for t in range(N_TABLES):
         qt = q.select("q_id", "qe", F.col(f"qb{t}").alias("qb"))
-        c = base.join(
-            F.broadcast(qt),
-            (F.col(f"b{t}") == F.col("qb")) & (F.col("vec_id") != F.col("q_id")),
-        ).select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            F.round(_cos_spark(F.col("qe"), F.col("e")), 6).alias("score"),
+        c = _rescore(
+            base.join(
+                F.broadcast(qt),
+                (F.col(f"b{t}") == F.col("qb")) & (F.col("vec_id") != F.col("q_id")),
+            )
         )
         pairs = c if pairs is None else pairs.unionByName(c)
     # same pair scores identically in every table → row-level distinct IS

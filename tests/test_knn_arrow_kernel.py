@@ -113,11 +113,11 @@ def test_knn_graph_probed_arrow_equals_union_of_probe_buckets(spark, sf_dir):
     """The probed variant must equal scoring each vertex against the UNION
     of its own and probe buckets — built here from the fold formulation's
     building blocks, independent of the Arrow path."""
+    from australian_company_etl_spark.functions.vectors import dot_fold
     from australian_company_etl_spark.plans.similarity import (
         KNN_GRAPH_K,
         _base,
         _bucket_spark,
-        _cos_spark,
         _keys_with_probes,
         knn_graph_lsh_probed,
         knn_planes,
@@ -139,7 +139,7 @@ def test_knn_graph_probed_arrow_equals_union_of_probe_buckets(spark, sf_dir):
     pairs = lhs.join(rhs, "bucket").filter(F.col("src_id") != F.col("nbr_id")).select(
         "src_id",
         "nbr_id",
-        F.round(_cos_spark(F.col("se"), F.col("ne")), 6).alias("score"),
+        F.round(dot_fold(F.col("se"), F.col("ne")), 6).alias("score"),
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("nbr_id"))
     exp = sorted(

@@ -65,25 +65,35 @@ def test_probe_keys_structure(spark, sf_dir):
         _base,
         _bucket_spark,
         _keys_with_probes,
+        _probe_flips,
     )
 
     planes = knn_planes(10)
-    rows = (
-        _base(spark, sf_dir)
-        .select(
-            _bucket_spark(F.col("e"), planes).alias("bucket"),
-            _keys_with_probes(F.col("e"), planes, 3).alias("keys"),
+    # 3 = query-directed probes; len(planes) = the whole Hamming-1 ball, the
+    # identity that makes G11 multiprobe the probed path with every plane
+    for n_probes in (3, len(planes)):
+        rows = (
+            _base(spark, sf_dir)
+            .select(
+                _bucket_spark(F.col("e"), planes).alias("bucket"),
+                _keys_with_probes(F.col("e"), planes, n_probes).alias("keys"),
+                _probe_flips(F.col("e"), planes, n_probes).alias("flips"),
+            )
+            .limit(200)
+            .collect()
         )
-        .limit(200)
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        assert len(r["keys"]) == 4
-        assert r["keys"][0] == r["bucket"]  # own bucket leads
-        assert len(set(r["keys"])) == 4  # distinct → no pair dedup needed
-        for k in r["keys"][1:]:
-            assert bin(k ^ r["bucket"]).count("1") == 1  # Hamming-1 flips
+        assert rows
+        for r in rows:
+            b = r["bucket"]
+            assert len(r["keys"]) == 1 + n_probes
+            assert r["keys"][0] == b  # own bucket leads
+            assert len(set(r["keys"])) == 1 + n_probes  # distinct → no pair dedup
+            for k in r["keys"][1:]:
+                assert bin(k ^ b).count("1") == 1  # Hamming-1 flips
+            # the ANN query path probes the same buckets
+            assert {b ^ f for f in r["flips"]} == set(r["keys"])
+            if n_probes == len(planes):
+                assert set(r["keys"]) == {b} | {b ^ (1 << p) for p in range(len(planes))}
 
 
 # ── recall is monotone in probes; cost grows ~1 bare term per probe ─────────

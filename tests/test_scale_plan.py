@@ -147,6 +147,30 @@ def test_dedup_pairgen_is_equijoin(spark, sf_dir):
         assert "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize(
+    "name,kernel",
+    [
+        ("unify_entities", "levenshtein("),
+        ("match_multi_scorer", "levenshtein("),
+        ("match_blocked_fuzzy", "levenshtein("),
+        ("dedup_setsim_prefix", "array_intersect("),
+        ("dedup_minhash_lsh", "array_intersect("),
+        ("dedup_ngram_jaccard", "array_intersect("),
+        ("match_keyword_jaccard", "array_intersect("),
+    ],
+)
+def test_pairwise_verify_scores_each_candidate_once(name, kernel, spark, sf_dir):
+    """Every pairwise verify scores through `score_once`: the scorer sits on
+    exactly one plan line, a projection under the explode barrier — never
+    in a join condition, where the pushed-down threshold would make each
+    surviving pair pay the scorer again in the output projection."""
+    plan = _executed_plan(QUERIES[name](spark, sf_dir))
+    lines = [ln for ln in plan.splitlines() if kernel in ln]
+    assert len(lines) == 1, f"{name}: scorer on {len(lines)} plan lines"
+    node = lines[0].split("[", 1)[0]
+    assert "Join" not in node, f"{name}: scorer evaluated in {node.strip()}"
+
+
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):
     """The 100 TB co-located-join posture: fact tables bucketed on the join
     key join WITHOUT an Exchange on either side (bucket pruning replaces
