@@ -36,6 +36,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from australian_company_etl_spark.sources.publish import write_json_atomic
+
 LEDGER_NAME = "_RUN_LEDGER.json"
 
 #: Airflow default_args parity (etl_pipeline.py: "retries": 1)
@@ -185,16 +187,5 @@ def run_dag(
                 # (already finished) run forever
                 history = []
     history.append({name: r.as_dict() for name, r in results.items()})
-    # atomic publish (write-tmp + rename): the previous in-place "w" open
-    # TRUNCATED the live ledger before dumping, so a crash in that window
-    # left a torn JSON that every later run_dag call died on at json.load —
-    # the same torn-manifest class the serving crash-point fuzz exposed
-    tmp = ledger_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(history, f, indent=1, sort_keys=True)
-        # fsync before rename (ADVICE r08): survive power loss, not just
-        # process crash — some filesystems persist the rename first
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, ledger_path)
+    write_json_atomic(ledger_path, history)
     return results

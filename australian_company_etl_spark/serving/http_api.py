@@ -41,6 +41,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from australian_company_etl_spark.plans import api as api_plans
+from australian_company_etl_spark.sources.publish import (
+    BACKUP,
+    REWRITE,
+    drop_dir,
+    heal_swap,
+    swap_in,
+    write_json_atomic,
+)
+# module-global name: tests patch it to corrupt a compaction's verify
+from australian_company_etl_spark.sources.publish import table_digest as _table_digest
 from australian_company_etl_spark.sources.registry import load_tables, table_path
 
 #: tables the D-family routes read; the snapshot contains exactly these.
@@ -115,64 +125,8 @@ def _index_lock(path: str, timeout: float = 60.0):
         os.close(fd)
 
 
-def _write_manifest(manifest_path: str, manifest: dict) -> None:
-    """Atomic manifest publish: write a sibling tmp file, then os.replace.
-    The previous in-place `open(path, "w")` + json.dump TRUNCATED the live
-    manifest before writing — a crash between the truncate and the dump
-    (found by the crash-point fuzz suite) left an empty `_SNAPSHOT.json`
-    that every later append, probe, and /health read died on FOREVER
-    (json.load raises, and nothing can rebuild the non-derivable table
-    digests the manifest carries). rename/replace is atomic on POSIX, so
-    every crash point now leaves either the old or the new manifest —
-    never a torn one."""
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-        # fsync before the rename: without it, power loss can publish the
-        # rename ahead of the data blocks on some filesystems — an empty
-        # manifest despite the atomic replace (ADVICE r08)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, manifest_path)
-
-
-def heal_interrupted_compaction(path: str, clean_tmp: bool = False) -> str | None:
-    """Recover an index directory from a compaction that died mid-swap.
-
-    The swap is two renames (live → .precompact, .compacting → live), NOT
-    atomic as a unit: a crash between them leaves no live directory, with
-    the good data stranded in ``.precompact``. Called on server startup,
-    at the head of every compaction, and by the appenders under their
-    lock, this rolls that window back (restore ``.precompact`` as live —
-    always correct: it is byte-identical to the pre-compaction index plus
-    nothing, and appends are excluded by the lock).
-
-    ``clean_tmp`` additionally discards a leftover ``.compacting`` rewrite
-    — pass it ONLY from `compact_index` itself (which must not run
-    concurrently with another compaction of the same index): to every
-    other caller a ``.compacting`` dir may be a LIVE compaction's
-    in-flight rewrite, and deleting it would destroy that work. Leaving
-    an orphan is safe — the next compaction's mode-overwrite rewrite
-    replaces it wholesale; the flag exists to reclaim the disk. Returns
-    a short action tag for logging/tests, or None if nothing needed
-    healing."""
-    import shutil
-
-    old = path.rstrip("/") + ".precompact"
-    tmp = path.rstrip("/") + ".compacting"
-    action = None
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            os.rename(old, path)
-            action = "rolled_back"
-        else:
-            # crashed after the second rename, before cleanup
-            shutil.rmtree(old)
-            action = "cleaned_precompact"
-    if clean_tmp and os.path.exists(tmp):
-        shutil.rmtree(tmp)
-        action = action or "cleaned_compacting"
-    return action
+#: the former name of `heal_swap`, kept for callers outside this module
+heal_interrupted_compaction = heal_swap
 
 
 def _doc_postings(docs: DataFrame) -> DataFrame:
@@ -180,30 +134,6 @@ def _doc_postings(docs: DataFrame) -> DataFrame:
 
     toks = docs.select("doc_id", F.explode(tokens_all_spark(F.col("text"))).alias("tok"))
     return toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
-
-
-def _drop_ledgers_before_rebuild(data_dir: str, names: tuple[str, ...]) -> None:
-    """Rename-away + delete derived ledger directories BEFORE a build
-    overwrites the postings they describe (ADVICE r7). The build paths used
-    to write the probe-stat ledgers AFTER the postings overwrite, so a
-    crash in between left a stale-but-READABLE ledger whose min_n_trgm
-    could exceed (or max_tf undercut) the new corpus's values — exactly
-    the soundness violation the append path's write-stats-first ordering
-    and the compaction's absent-on-crash swap exclude. Dropping them first
-    makes every crash state ABSENT (probe declines, appenders skip,
-    compaction rebuilds) instead of stale. The rename is atomic; a crash
-    mid-rmtree leaves only the ignored `.stale` orphan, reclaimed on the
-    next build."""
-    import shutil
-
-    for name in names:
-        path = table_path(data_dir, name)
-        stale = path.rstrip("/") + ".stale"
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-        if os.path.exists(path):
-            os.rename(path, stale)
-            shutil.rmtree(stale)
 
 
 def build_fulltext_index(
@@ -244,7 +174,8 @@ def build_fulltext_index(
     # append path backfills it once from the index's distinct doc_ids,
     # which is strictly better than a stale ledger asserting membership
     # for documents the new postings no longer contain.
-    _drop_ledgers_before_rebuild(out_dir, (FULLTEXT_STATS, FULLTEXT_DOCS))
+    for name in (FULLTEXT_STATS, FULLTEXT_DOCS):
+        drop_dir(table_path(out_dir, name))
     tf.repartitionByRange(n_files, "tok").sortWithinPartitions("tok").write.mode(
         "overwrite"
     ).parquet(path)
@@ -356,12 +287,12 @@ def append_documents_to_index(
     ledger_path = table_path(data_dir, FULLTEXT_DOCS)
     new_docs = new_docs.dropDuplicates(["doc_id"])
     with _index_lock(path):
-        heal_interrupted_compaction(path)
+        heal_swap(path)
         # the doc ledger swaps during fulltext compaction too — heal it
         # BEFORE the exists-check below, or a mid-swap crash would look
         # like a pre-ledger snapshot and the postings backfill would lose
         # every token-less doc's membership
-        heal_interrupted_compaction(ledger_path)
+        heal_swap(ledger_path)
         if not os.path.exists(ledger_path):
             # pre-ledger snapshot (postings only, published before the
             # ledger existed): backfill it ONCE from the index's distinct
@@ -410,7 +341,7 @@ def append_documents_to_index(
             manifest = json.load(f)
         manifest[FULLTEXT_INDEX]["n_docs"] = spark.read.parquet(ledger_path).count()
         manifest[FULLTEXT_INDEX]["rows"] = spark.read.parquet(path).count()
-        _write_manifest(manifest_path, manifest)
+        write_json_atomic(manifest_path, manifest)
     return {"docs_appended": n_new, "n_docs": manifest[FULLTEXT_INDEX]["n_docs"]}
 
 
@@ -550,8 +481,9 @@ def build_trigram_index(
     path = table_path(out_dir, TRIGRAM_INDEX)
     # drop the probe-stat ledgers BEFORE overwriting the postings they
     # describe — a crash then leaves them absent (probe declines), never
-    # stale over the new corpus (see _drop_ledgers_before_rebuild)
-    _drop_ledgers_before_rebuild(out_dir, (TRIGRAM_STATS, TRIGRAM_META))
+    # stale over the new corpus (see build_fulltext_index)
+    for name in (TRIGRAM_STATS, TRIGRAM_META):
+        drop_dir(table_path(out_dir, name))
     (
         trg.repartitionByRange(n_files, "trgm")
         .sortWithinPartitions("trgm")
@@ -576,53 +508,6 @@ def _write_trigram_df_stats(spark: SparkSession, postings: DataFrame, data_dir: 
     """(trgm, df_inc) ledger rows for a postings batch."""
     stats = postings.groupBy("trgm").agg(F.count("*").alias("df_inc"))
     stats.coalesce(1).write.mode(mode).parquet(table_path(data_dir, TRIGRAM_STATS))
-
-
-def _rebuild_trigram_stats(spark: SparkSession, data_dir: str) -> dict:
-    """Compaction-time wholesale REBUILD of the trigram probe-stat ledgers
-    from the (just-compacted) postings index — every ledger value is
-    derivable from the postings (df = count per trgm, n_parts = distinct
-    parts, min_n_trgm = min over the stored per-part counts), so the
-    rebuild is both the fold and the heal: torn, absent, and
-    crash-inflated ledger states all converge to EXACT values here, and
-    pre-stats snapshots gain the ledgers at their first compaction (the
-    migration path), exactly like `_rebuild_fulltext_stats`. Caller holds
-    the index lock (no concurrent appender can write ledger rows the swap
-    below would drop). The per-ledger swap is write-tmp + rmtree + rename:
-    a crash between them leaves that ledger ABSENT, which the probe treats
-    as decline and appenders skip — so a READABLE ledger can never
-    silently miss a batch. (The previous driver-side fold rewrote the
-    ledgers IN PLACE with mode-overwrite, whose crash window leaves a
-    present-but-torn dir that later appends keep feeding: min_n_trgm would
-    then read as the minimum over post-crash batches only — ABOVE the true
-    corpus minimum — silently breaking the max-df guard's soundness. It
-    also raised TypeError on the NULL min_n_trgm a zero-trigram batch's
-    meta row carries. Rebuilding from the index eliminates both.)"""
-    import shutil
-
-    idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX))
-    parts = idx.select("p_partkey", "n_trgm").distinct()
-    frames = (
-        (TRIGRAM_STATS, idx.groupBy("trgm").agg(F.count("*").alias("df_inc"))),
-        (
-            TRIGRAM_META,
-            parts.agg(
-                F.count("*").alias("n_parts_inc"),
-                F.min("n_trgm").alias("min_n_trgm"),
-            ),
-        ),
-    )
-    out = {}
-    for name, df in frames:
-        path = table_path(data_dir, name)
-        tmp = path.rstrip("/") + ".rebuilding"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-        out[name] = n
-    return out
 
 
 def _write_trigram_stats(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
@@ -652,7 +537,7 @@ def append_parts_to_trigram_index(
     path = table_path(data_dir, TRIGRAM_INDEX)
     new_parts = new_parts.dropDuplicates(["p_partkey"])
     with _index_lock(path):
-        heal_interrupted_compaction(path)
+        heal_swap(path)
         indexed = spark.read.parquet(path).select("p_partkey").distinct()
         fresh = new_parts.join(indexed, "p_partkey", "left_anti")
         n_new = fresh.count()
@@ -702,7 +587,7 @@ def append_parts_to_trigram_index(
         with open(manifest_path) as f:
             manifest = json.load(f)
         manifest[TRIGRAM_INDEX]["rows"] = spark.read.parquet(path).count()
-        _write_manifest(manifest_path, manifest)
+        write_json_atomic(manifest_path, manifest)
     return {"parts_appended": n_new}
 
 
@@ -731,11 +616,9 @@ def compact_index(
     index lock, re-diffs the listing, and carries any file appended during
     the rewrite into the new directory verbatim (appended files are
     self-contained key-sorted parquet — copying them IS an append), so a
-    concurrent batch can never be lost. The two renames of the swap are
-    NOT atomic as a unit — a crash between them leaves no live directory
-    — but `heal_interrupted_compaction` (run here first, and at server
-    startup) rolls that window back, and the lock keeps appenders out of
-    it."""
+    concurrent batch can never be lost. A crash mid-swap is rolled back
+    by `heal_swap` (run here first, and at server startup), and the lock
+    keeps appenders out of the swap window."""
     import glob
     import shutil
 
@@ -757,14 +640,14 @@ def compact_index(
         with _index_lock(path, timeout=600.0):
             # clean_tmp is safe ONLY here: concurrent compactions of one
             # index are excluded by the compaction flock above
-            heal_interrupted_compaction(path, clean_tmp=True)
+            heal_swap(path, clean_tmp=True)
             # point-in-time listing: the rewrite covers exactly these files,
             # whatever lands afterwards is handled by the swap-time re-diff
             listed = sorted(glob.glob(os.path.join(path, "*.parquet")))
         src = spark.read.parquet(*listed)
         expected = _table_digest(src)
 
-        tmp = path.rstrip("/") + ".compacting"
+        tmp = path.rstrip("/") + REWRITE
         (
             src.repartitionByRange(n_files, key_col)
             .sortWithinPartitions(key_col)
@@ -788,10 +671,7 @@ def compact_index(
             delta = sorted(set(glob.glob(os.path.join(path, "*.parquet"))) - set(listed))
             for f in delta:
                 shutil.copy2(f, os.path.join(tmp, os.path.basename(f)))
-            old = path.rstrip("/") + ".precompact"
-            os.rename(path, old)
-            os.rename(tmp, path)
-            shutil.rmtree(old)
+            swap_in(tmp, path)
         out = {
             "files_before": len(listed),
             "files_after": len(glob.glob(os.path.join(path, "*.parquet"))),
@@ -805,7 +685,7 @@ def compact_index(
             # compacted index (fold + heal + migration in one move); under
             # the index lock so a concurrent append can't interleave
             with _index_lock(path, timeout=600.0):
-                out["ledgers"] = _rebuild_trigram_stats(spark, data_dir)
+                out["ledgers"] = _rebuild_stats(spark, data_dir, TRIGRAM_INDEX)
         if index_name == FULLTEXT_INDEX:
             # the doc ledger grows one file per append too; same
             # digest-verified rewrite+swap, under the index lock (the
@@ -821,28 +701,28 @@ def compact_index(
                 # so compaction REBUILDS it from the compacted index — the
                 # fold and the heal in one move (crash-inflated df/max_tf
                 # from append windows converge back to exact counts here)
-                out["stats"] = _rebuild_fulltext_stats(spark, data_dir)
+                stats = _rebuild_stats(spark, data_dir, FULLTEXT_INDEX)
+                out["stats"] = {"rows": stats[FULLTEXT_STATS]}
     return out
 
 
 def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -> dict:
     """Digest-verified rewrite of the fulltext doc ledger (caller holds the
-    index lock and the compaction flock). Crash between the swap's two
-    renames strands the ledger in `.precompact`; appenders and make_server
-    heal it exactly like the index (they must — a missing ledger would
-    otherwise trigger the postings backfill, which cannot represent
+    index lock and the compaction flock). Appenders and make_server heal a
+    mid-swap crash exactly like the index's (they must — a missing ledger
+    would otherwise trigger the postings backfill, which cannot represent
     token-less documents)."""
     import glob
     import shutil
 
     ledger_path = table_path(data_dir, FULLTEXT_DOCS)
-    heal_interrupted_compaction(ledger_path, clean_tmp=True)
+    heal_swap(ledger_path, clean_tmp=True)
     if not os.path.isdir(ledger_path):
         return {"ledger": "absent"}
     files_before = len(glob.glob(os.path.join(ledger_path, "*.parquet")))
     src = spark.read.parquet(ledger_path)
     expected = _table_digest(src)
-    tmp = ledger_path.rstrip("/") + ".compacting"
+    tmp = ledger_path.rstrip("/") + REWRITE
     src.repartition(max(1, n_files // 4)).write.mode("overwrite").parquet(tmp)
     actual = _table_digest(spark.read.parquet(tmp))
     if actual != expected:
@@ -850,10 +730,7 @@ def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -
         raise RuntimeError(
             f"ledger compaction dropped data: wrote {expected}, read back {actual}"
         )
-    old = ledger_path.rstrip("/") + ".precompact"
-    os.rename(ledger_path, old)
-    os.rename(tmp, ledger_path)
-    shutil.rmtree(old)
+    swap_in(tmp, ledger_path)
     return {
         "files_before": files_before,
         "files_after": len(glob.glob(os.path.join(ledger_path, "*.parquet"))),
@@ -874,34 +751,47 @@ def _write_fulltext_stats(
     stats.coalesce(1).write.mode(mode).parquet(table_path(data_dir, FULLTEXT_STATS))
 
 
-def _rebuild_fulltext_stats(spark: SparkSession, data_dir: str) -> dict:
-    """Compaction-time wholesale rebuild of the fulltext probe-stat ledger
-    from the (just-compacted) postings index — every value in the ledger is
-    derivable from the postings, so rebuilding is both the fold AND the
-    heal: torn, absent, and crash-inflated states all converge to exact
-    counts here. Caller holds the index lock (no concurrent appender can
-    write ledger rows that the swap below would drop). Unlike the trigram
-    fold this aggregates Spark-side: the token vocabulary is corpus-sized,
-    not alphabet-bounded, so a driver collect would not scale. The swap is
-    rmtree + rename; a crash between them leaves the ledger ABSENT, which
-    the probe treats as decline and the next compaction rebuilds — and
-    appenders skip stats maintenance while it is absent, so a readable
-    ledger can never silently miss a batch (the soundness invariant:
-    ledger max_tf ≥ every indexed tf)."""
-    import shutil
+def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
+    """Compaction-time wholesale REBUILD of an index's probe-stat ledgers
+    from the (just-compacted) postings — every ledger value is derivable
+    from them (df = count per term, max_tf = max tf, n_parts = distinct
+    parts, min_n_trgm = min over the stored per-part counts), so the
+    rebuild is both the fold and the heal: torn, absent and crash-inflated
+    states all converge to exact values here, and pre-stats snapshots gain
+    the ledgers at their first compaction. Caller holds the index lock (no
+    concurrent appender can write ledger rows the swap would drop).
 
-    stats_path = table_path(data_dir, FULLTEXT_STATS)
-    idx_path = table_path(data_dir, FULLTEXT_INDEX)
-    tmp = stats_path.rstrip("/") + ".rebuilding"
-    stats = spark.read.parquet(idx_path).groupBy("tok").agg(
-        F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    if os.path.exists(stats_path):
-        shutil.rmtree(stats_path)
-    os.rename(tmp, stats_path)
-    return {"rows": n}
+    Each ledger is dropped (`drop_dir`) before its rebuild is renamed in,
+    so every crash state leaves it exact or ABSENT — absent makes the
+    probe decline and appenders skip it. A crash while deleting the live
+    ledger in place would leave a readable PARTIAL ledger, whose
+    under-counted max_tf (or raised min_n_trgm) breaks the max-df guard's
+    soundness (ledger max_tf ≥ every indexed tf, min_n_trgm ≤ the true
+    minimum). Returns {ledger: rows}."""
+    idx = spark.read.parquet(table_path(data_dir, index_name))
+    if index_name == FULLTEXT_INDEX:
+        frames = {
+            FULLTEXT_STATS: idx.groupBy("tok").agg(
+                F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
+            )
+        }
+    else:
+        parts = idx.select("p_partkey", "n_trgm").distinct()
+        frames = {
+            TRIGRAM_STATS: idx.groupBy("trgm").agg(F.count("*").alias("df_inc")),
+            TRIGRAM_META: parts.agg(
+                F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm")
+            ),
+        }
+    out = {}
+    for name, df in frames.items():
+        path = table_path(data_dir, name)
+        tmp = path.rstrip("/") + ".rebuilding"
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        out[name] = spark.read.parquet(tmp).count()
+        drop_dir(path)
+        swap_in(tmp, path)
+    return out
 
 
 def fulltext_rank_maxdf(
@@ -1352,16 +1242,6 @@ def fulltext_rank_from_sharded(
     return _rank_matched_postings(idx, topk, n_docs)
 
 
-def _table_digest(df: DataFrame) -> tuple[int, int]:
-    """(rows, order-insensitive content hash) in one aggregate pass — the
-    publish-integrity check (same discipline as sources/export.py:54-75)."""
-    row_hash = F.crc32(
-        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in sorted(df.columns)])
-    )
-    r = df.agg(F.count("*").alias("rows"), F.sum(row_hash).alias("h")).collect()[0]
-    return int(r["rows"]), int(r["h"] or 0)
-
-
 def snapshot_tables(
     spark: SparkSession, sf_dir: str, out_dir: str, tables: list[str] | None = None
 ) -> dict:
@@ -1389,7 +1269,7 @@ def snapshot_tables(
         manifest[FULLTEXT_SHARDED] = build_fulltext_index_sharded(spark, sf_dir, out_dir)
     if "part" in manifest:
         manifest[TRIGRAM_INDEX] = {"rows": build_trigram_index(spark, sf_dir, out_dir)}
-    _write_manifest(os.path.join(out_dir, "_SNAPSHOT.json"), manifest)
+    write_json_atomic(os.path.join(out_dir, "_SNAPSHOT.json"), manifest)
     return manifest
 
 
@@ -1491,10 +1371,10 @@ class _Handler(BaseHTTPRequestHandler):
         this check and the scan is one transient failed request, not the
         persistent outage this heals.)"""
         p = table_path(self.data_dir, name)
-        if not os.path.isdir(p) and os.path.isdir(p.rstrip("/") + ".precompact"):
+        if not os.path.isdir(p) and os.path.isdir(p.rstrip("/") + BACKUP):
             with contextlib.suppress(OSError, TimeoutError):
                 with _index_lock(p, timeout=5.0):
-                    heal_interrupted_compaction(p)
+                    heal_swap(p)
         return os.path.isdir(p)
 
     def _send(self, code: int, payload: dict) -> None:
@@ -1629,12 +1509,12 @@ def make_server(spark: SparkSession, data_dir: str, port: int = 0) -> ThreadingH
         (TRIGRAM_INDEX, TRIGRAM_INDEX),
     ):
         p = table_path(data_dir, idx)
-        if os.path.exists(p) or os.path.exists(p.rstrip("/") + ".precompact"):
+        if os.path.exists(p) or os.path.exists(p.rstrip("/") + BACKUP):
             try:
                 # under the lock: a live compaction mid-swap must not see
                 # its .precompact rolled back between its two renames
                 with _index_lock(table_path(data_dir, lock_owner)):
-                    heal_interrupted_compaction(p)
+                    heal_swap(p)
             except OSError as exc:
                 # read-only snapshot mount: the lock file cannot be created
                 # (EROFS/EACCES). Healing is only meaningful where

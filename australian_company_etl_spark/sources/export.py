@@ -12,6 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from australian_company_etl_spark.sources.publish import (
+    REWRITE,
+    heal_swap,
+    row_hash,
+    swap_in,
+    write_json_atomic,
+)
+
 
 def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     out = df.coalesce(1) if single_file else df
@@ -52,20 +60,13 @@ MANIFEST_NAME = "_MANIFEST.json"
 
 
 def _partition_stats(df: DataFrame, partition_by: list[str]) -> dict:
-    from pyspark.sql import functions as F
-
-    # order-insensitive content hash: sum of per-row crc32 over all columns
-    # in NAME order (a re-read moves partition columns to the end, so
-    # positional order is not stable), independent of partition layout and
-    # task scheduling
     import json
 
-    row_hash = F.crc32(
-        F.concat_ws("\x1f", *[F.col(c).cast("string") for c in sorted(df.columns)])
-    )
+    from pyspark.sql import functions as F
+
     rows = (
         df.groupBy(*partition_by)
-        .agg(F.count("*").alias("rows"), F.sum(row_hash).alias("content_hash"))
+        .agg(F.count("*").alias("rows"), F.sum(row_hash(df)).alias("content_hash"))
         .collect()
     )
     # manifest keys are canonical JSON arrays of the partition values: a
@@ -80,26 +81,6 @@ def _partition_stats(df: DataFrame, partition_by: list[str]) -> dict:
         }
         for r in rows
     }
-
-
-def _dump_json_atomic(path: str, obj: dict) -> None:
-    """write-tmp + os.replace: a crash can leave the old file or the new
-    one, never a truncated-but-unparseable manifest (the torn-write class
-    the serving crash-point fuzz exposed in _SNAPSHOT.json — an in-place
-    `open(path, "w")` truncates BEFORE json.dump writes)."""
-    import json
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-        # flush+fsync before the rename: os.replace alone is atomic against
-        # process crash, but on power loss some filesystems can persist the
-        # rename before the data blocks — publishing an empty/torn file, the
-        # exact class the crash fuzz closes for process crashes (ADVICE r08)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
 
 
 def _parse_manifest_key(key: str, n_cols: int) -> list[str]:
@@ -134,7 +115,7 @@ def export_with_manifest(df: DataFrame, path: str, partition_by: list[str]) -> d
         "columns": sorted(df.columns),
         "partitions": _partition_stats(df, partition_by),
     }
-    _dump_json_atomic(os.path.join(path, MANIFEST_NAME), manifest)
+    write_json_atomic(os.path.join(path, MANIFEST_NAME), manifest)
     return manifest
 
 
@@ -191,18 +172,9 @@ def compact_dataset(spark, path: str, target_bytes: int = 128 << 20) -> dict:
 
     from pyspark.sql import functions as F
 
-    # heal a compaction that died between the swap's two renames below
-    # (no dataset at `path`, the good data stranded in `.precompact`) —
-    # without this, every reader and this function's own manifest read
-    # fail with FileNotFoundError forever. Same protocol as the serving
-    # index heal (serving/http_api.py:heal_interrupted_compaction).
-    old = path.rstrip("/") + ".precompact"
-    if os.path.isdir(old):
-        if not os.path.isdir(path):
-            os.rename(old, path)
-        else:  # crashed after the second rename, before cleanup
-            shutil.rmtree(old)
-
+    # without this heal, a compaction that died mid-swap fails every
+    # reader and this function's own manifest read forever
+    heal_swap(path)
     with open(os.path.join(path, MANIFEST_NAME)) as f:
         manifest = json.load(f)
     part_cols = manifest["partition_by"]
@@ -228,15 +200,12 @@ def compact_dataset(spark, path: str, target_bytes: int = 128 << 20) -> dict:
     # partition columns read back typed; join on their string form to match
     # the manifest's key encoding
     join_on = [df[c].cast("string") == plan[c] for c in part_cols]
-    salt = F.pmod(
-        F.crc32(F.concat_ws("\x1f", *[df[c].cast("string") for c in sorted(df.columns)])),
-        F.col("n_files"),
-    ).alias("_salt")
+    salt = F.pmod(row_hash(df), F.col("n_files")).alias("_salt")
     routed = df.join(F.broadcast(plan), join_on).select(
         *[df[c] for c in df.columns], salt
     )
 
-    tmp = path.rstrip("/") + ".compacting"
+    tmp = path.rstrip("/") + REWRITE
     # explicit partition count: the planned total file count. Without it,
     # AQE coalesces the shuffle (it only sees bytes, not the files-per-
     # directory contract) and a coalesced task writes one oversized file
@@ -256,10 +225,7 @@ def compact_dataset(spark, path: str, target_bytes: int = 128 << 20) -> dict:
         shutil.rmtree(tmp)
         raise RuntimeError(f"compaction dropped data, aborted: {check['mismatches']}")
 
-    old = path.rstrip("/") + ".precompact"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(tmp, path)
     files_after = glob.glob(os.path.join(path, *["*"] * len(part_cols), "*.parquet"))
     return {
         "files_before": len(files_before),
@@ -391,7 +357,7 @@ def export_webdataset(
         "members": exts,
         "per_shard": {f"shard-{int(sid):05d}.tar": int(n) for sid, n in pairs},
     }
-    _dump_json_atomic(mpath, manifest)
+    write_json_atomic(mpath, manifest)
     return manifest
 
 

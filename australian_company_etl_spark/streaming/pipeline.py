@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from australian_company_etl_spark.functions.exactmath import sum_cents
+from australian_company_etl_spark.sources.publish import heal_swap, swap_in
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 EVENTS_SCHEMA = (
@@ -353,26 +354,19 @@ def run_upsert_stream_to_parquet(
     processed-file ledger (extract_commoncrawl.py:89-93) for free. Returns
     the number of micro-batches this run actually processed."""
     import os
-    import shutil
 
     n_batches = 0
-    preswap = target + ".preswap"
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
         sp = batch.sparkSession
-        # heal a merge that died between the swap's two renames (target
-        # missing, previous contents stranded in .preswap): restore the
-        # pre-crash target, then let the replayed batch re-merge onto it —
-        # the anti-join makes the replay idempotent. Without this, the
-        # checkpoint replays ONLY the crashed batch (earlier source files
-        # are never re-read), so the old non-atomic overwrite silently
-        # dropped every previously merged batch on exactly this crash.
-        if not os.path.isdir(target) and os.path.isdir(preswap):
-            os.rename(preswap, target)
-        elif os.path.isdir(preswap):  # crashed after rename 2: orphan copy
-            shutil.rmtree(preswap)
+        # heal a merge that died mid-swap, then let the replayed batch
+        # re-merge onto the restored target — the anti-join makes the
+        # replay idempotent. Without this, the checkpoint replays ONLY the
+        # crashed batch (earlier source files are never re-read), so every
+        # previously merged batch would be lost on exactly this crash.
+        heal_swap(target)
         batch = batch.dropDuplicates([key])
         if os.path.isdir(target):
             cur = sp.read.parquet(target)
@@ -381,17 +375,11 @@ def run_upsert_stream_to_parquet(
         else:
             merged = batch
         # rewrite via a staging suffix (a plain overwrite would truncate the
-        # directory being read within this same batch), then swap with two
-        # renames — the same protocol as the serving-index compaction: a
-        # crash before the swap leaves target intact (replay re-merges), a
-        # crash between the renames is healed above on replay
+        # directory being read within this same batch), then swap: a crash
+        # before the swap leaves target intact (replay re-merges)
         staging = target + ".staging"
         merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(target):
-            os.rename(target, preswap)
-        os.rename(staging, target)
-        if os.path.isdir(preswap):
-            shutil.rmtree(preswap)
+        swap_in(staging, target)
 
     writer = (
         spark.readStream.schema(schema)

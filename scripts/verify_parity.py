@@ -207,13 +207,10 @@ def main() -> int:
             failures.append(name)
 
     if use_cache and cache_path:
-        # atomic publish, corpus-stamped — a different corpus never reuses
-        tmp = cache_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"corpus": corpus, "entries": cache}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, cache_path)
+        from australian_company_etl_spark.sources.publish import write_json_atomic
+
+        # corpus-stamped — a different corpus never reuses
+        write_json_atomic(cache_path, {"corpus": corpus, "entries": cache})
 
     print(f"\n{len(names) - len(failures)}/{len(names)} ok; failures: {failures}")
     return 1 if failures else 0

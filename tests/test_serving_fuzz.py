@@ -287,8 +287,8 @@ def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
     spark, tmp_path, injector
 ):
     """The trigram index's compaction rebuilds its TWO probe-stat ledgers
-    via a per-ledger write-tmp + rmtree + rename swap (`_rebuild_trigram_
-    stats`) — a different chain than the fulltext side's digest-verified
+    via a per-ledger write-tmp + drop + rename chain (`_rebuild_stats`) —
+    a different chain than the fulltext side's digest-verified
     ledger compaction, so it gets its own boundary enumeration. Crash
     before every snapshot-dir mutation; recovery = a no-op re-delivery
     (heals interrupted swaps) + a fresh compaction; postings, both
@@ -591,3 +591,75 @@ def test_trigram_rebuild_crash_at_every_mutation_boundary_heals(
     # two ledger rename-aways (+ stale rmtrees on later iterations), the
     # postings overwrite, and the two ledger rewrites at minimum
     assert crash_points >= 4, f"only {crash_points} trigram rebuild boundaries found"
+
+
+class _CrashInDelete(BaseException):
+    pass
+
+
+@pytest.mark.parametrize(
+    "ledger", [api.FULLTEXT_STATS, api.TRIGRAM_STATS, api.TRIGRAM_META]
+)
+def test_stats_rebuild_crash_mid_delete_leaves_no_partial_ledger(
+    spark, tmp_path, monkeypatch, ledger
+):
+    """A compaction's probe-stat rebuild replaces each ledger wholesale. A
+    crash while the OLD ledger's files are being deleted must leave it
+    absent (the probe declines) or complete — never a readable partial
+    ledger, whose under-counted df/max_tf (or raised min_n_trgm) would
+    break the max-df guard's bound. Crash on the second ledger data file
+    removed, after two appends gave the ledger several files; a further
+    compaction must then converge to the clean rebuild."""
+    import glob
+
+    d = str(tmp_path / "snap")
+    os.makedirs(d)
+    if ledger == api.FULLTEXT_STATS:
+        index, key = api.FULLTEXT_INDEX, "tok"
+        corpus = str(tmp_path / "corpus")
+        _mk_docs(spark, 0, 12).write.parquet(corpus + "/documents.parquet")
+        manifest = {index: api.build_fulltext_index(spark, corpus, d, n_files=2)}
+        append = api.append_documents_to_index
+        batches = (_mk_docs(spark, 12, 18), _mk_docs(spark, 18, 24))
+    else:
+        index, key = api.TRIGRAM_INDEX, "trgm"
+        corpus = str(tmp_path / "parts")
+        _mk_parts(spark, 0, 10).write.parquet(corpus + "/part.parquet")
+        manifest = {index: {"rows": api.build_trigram_index(spark, corpus, d)}}
+        append = api.append_parts_to_trigram_index
+        batches = (_mk_parts(spark, 10, 15), _mk_parts(spark, 15, 20))
+    with open(os.path.join(d, "_SNAPSHOT.json"), "w") as f:
+        json.dump(manifest, f)
+    for batch in batches:
+        append(spark, batch, d)
+    ledger_path = table_path(d, ledger)
+    # Spark part files carry a per-write UUID: these names are the ledger's
+    doomed = {os.path.basename(p) for p in glob.glob(os.path.join(ledger_path, "*.parquet"))}
+    assert len(doomed) >= 2
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(d, clean)
+    api.compact_index(spark, clean, index, key, n_files=2)
+    want = api._table_digest(spark.read.parquet(table_path(clean, ledger)))
+
+    real_unlink = os.unlink
+    removed = []
+
+    def unlink(path, *a, **kw):
+        name = os.path.basename(os.fsdecode(path))
+        if name in doomed:
+            removed.append(name)
+            if len(removed) == 2:
+                raise _CrashInDelete(name)
+        return real_unlink(path, *a, **kw)
+
+    monkeypatch.setattr(os, "unlink", unlink)
+    with pytest.raises(_CrashInDelete):
+        api.compact_index(spark, d, index, key, n_files=2)
+    monkeypatch.setattr(os, "unlink", real_unlink)
+
+    if os.path.exists(ledger_path):
+        got = api._table_digest(spark.read.parquet(ledger_path))
+        assert got == want, f"readable partial {ledger}: {got} != clean {want}"
+    api.compact_index(spark, d, index, key, n_files=2)
+    assert api._table_digest(spark.read.parquet(ledger_path)) == want

@@ -470,7 +470,7 @@ def test_stateful_cents_round_half_up_like_batch(spark, tmp_path):
 
 def test_upsert_heals_midswap_crash_and_keeps_merged_history(spark, sf_dir, tmp_path):
     """A merge that dies between the swap's two renames strands the target
-    in .preswap; the checkpoint replays ONLY the crashed batch (earlier
+    in .precompact; the checkpoint replays ONLY the crashed batch (earlier
     source files are never re-read), so without the heal every previously
     merged batch is silently lost (review finding). The next run must
     restore the stranded target and merge the new file onto it."""
@@ -495,7 +495,7 @@ def test_upsert_heals_midswap_crash_and_keeps_merged_history(spark, sf_dir, tmp_
     assert spark.read.parquet(target).count() == early.count()
 
     # the exact mid-swap crash state: first rename done, second never ran
-    os.rename(target, target + ".preswap")
+    os.rename(target, target + ".precompact")
     late.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "late"))
     shutil.copy(
         sorted(glob.glob(str(tmp_path / "late") + "/part-*.parquet"))[0],
@@ -507,4 +507,4 @@ def test_upsert_heals_midswap_crash_and_keeps_merged_history(spark, sf_dir, tmp_
     assert n2 == 1  # only the new file replayed — history came from the heal
     out = spark.read.parquet(target)
     assert out.count() == docs.count(), "previously merged batches were lost"
-    assert not os.path.exists(target + ".preswap")
+    assert not os.path.exists(target + ".precompact")
