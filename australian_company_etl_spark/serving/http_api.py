@@ -18,12 +18,18 @@ actually has:
 
 Scale posture: every route is a pushed-down point/top-k plan (keyset
 pagination D4, broadcast dim joins D1/D3, sort-limit top-k D5/D6), never
-an OFFSET walk or full collect. On a real cluster the snapshot lives in
-object storage; latency-critical keys would additionally be fronted by a
-key-value projection of the same snapshot — the routes and their
-semantics (and this module's tests) stay identical. The stdlib server is
-deliberately dependency-free (no FastAPI in the sandbox); it is the
-protocol shim, not the engine.
+an OFFSET walk or full collect. Every table and index is read through
+`sources.registry.read_parquet`, so a request over an unchanged snapshot
+pays its plan's Spark jobs and no schema-inference job. Jobs per warm
+request: `/companies/{key}` 2 (the nation broadcast and the collect),
+`/companies/by_state` 2, `/companies/search` 1, `/companies` 1, and at
+most 6 each for `/search` and `/fuzzy` (of which the max-df skip, when
+it declines after reading its ledgers, spends 2 and 4). On a real
+cluster the snapshot lives in object storage; latency-critical keys
+would additionally be fronted by a key-value projection of the same
+snapshot — the routes and their semantics (and this module's tests) stay
+identical. The stdlib server is deliberately dependency-free (no FastAPI
+in the sandbox); it is the protocol shim, not the engine.
 """
 
 from __future__ import annotations
@@ -51,12 +57,15 @@ from australian_company_etl_spark.sources.publish import (
 )
 # module-global name: tests patch it to corrupt a compaction's verify
 from australian_company_etl_spark.sources.publish import table_digest as _table_digest
-from australian_company_etl_spark.sources.registry import load_tables, table_path
+from australian_company_etl_spark.sources.registry import load_tables, read_parquet, table_path
 
 #: tables the D-family routes read; the snapshot contains exactly these.
 SERVING_TABLES = ["customer", "nation", "part", "documents"]
 
 MAX_PAGE_SIZE = 1000  # serving-side cap: a page is a page, not an export
+
+#: the snapshot manifest: row counts, digests and index sizes per table
+MANIFEST = "_SNAPSHOT.json"
 
 FULLTEXT_INDEX = "fulltext_index"
 #: doc ledger beside the full-text index: one row per indexed doc_id. It —
@@ -129,6 +138,21 @@ def _index_lock(path: str, timeout: float = 60.0):
 heal_interrupted_compaction = heal_swap
 
 
+def _update_manifest(data_dir: str, index_name: str, **values) -> None:
+    """Set ``values`` on the manifest entry of ``index_name``. The manifest
+    is one file shared by every index, so its read-modify-write holds the
+    manifest lock: two appenders (full-text and trigram) each under only
+    their own index lock would otherwise overlap and one would write back
+    the other's stale entry. Callers hold their index lock, so the lock
+    order is index → manifest everywhere."""
+    manifest_path = os.path.join(data_dir, MANIFEST)
+    with _index_lock(manifest_path):
+        with open(manifest_path) as f:
+            manifest = json.load(f)
+        manifest[index_name].update(values)
+        write_json_atomic(manifest_path, manifest)
+
+
 def _doc_postings(docs: DataFrame) -> DataFrame:
     from australian_company_etl_spark.functions.textfns import tokens_all_spark
 
@@ -181,9 +205,9 @@ def build_fulltext_index(
     ).parquet(path)
     ledger = docs.select("doc_id").distinct()
     ledger.write.mode("overwrite").parquet(table_path(out_dir, FULLTEXT_DOCS))
-    n_docs = spark.read.parquet(table_path(out_dir, FULLTEXT_DOCS)).count()
-    _write_fulltext_stats(spark, spark.read.parquet(path), out_dir, mode="overwrite")
-    return {"rows": spark.read.parquet(path).count(), "n_docs": n_docs}
+    n_docs = read_parquet(spark, table_path(out_dir, FULLTEXT_DOCS)).count()
+    _write_fulltext_stats(spark, read_parquet(spark, path), out_dir, mode="overwrite")
+    return {"rows": read_parquet(spark, path).count(), "n_docs": n_docs}
 
 
 def _shard_segments(tf: DataFrame, shard_docs: int) -> DataFrame:
@@ -229,7 +253,7 @@ def build_fulltext_index_sharded(
     seg.repartitionByRange(n_files, "tok").sortWithinPartitions(
         "tok", "shard_id"
     ).write.mode("overwrite").parquet(path)
-    n = spark.read.parquet(path).count()
+    n = read_parquet(spark, path).count()
     return {"rows": n, "shard_docs": shard_docs}
 
 
@@ -253,7 +277,7 @@ def append_documents_to_sharded(
     seg.repartitionByRange(2, "tok").sortWithinPartitions("tok", "shard_id").write.mode(
         "append"
     ).parquet(path)
-    return {"segments_appended": spark.read.parquet(path).count()}
+    return {"segments_appended": read_parquet(spark, path).count()}
 
 
 def append_documents_to_index(
@@ -299,10 +323,10 @@ def append_documents_to_index(
             # doc_ids — exactly the old postings-anti-join membership
             # source, so migration changes no append decision. (Token-less
             # docs were unrepresentable in that layout; nothing to recover.)
-            spark.read.parquet(path).select("doc_id").distinct().write.parquet(
+            read_parquet(spark, path).select("doc_id").distinct().write.parquet(
                 ledger_path
             )
-        in_ledger = spark.read.parquet(ledger_path).select("doc_id")
+        in_ledger = read_parquet(spark, ledger_path).select("doc_id")
         fresh = new_docs.join(in_ledger, "doc_id", "left_anti")
         n_new = fresh.count()
         if n_new:
@@ -311,7 +335,7 @@ def append_documents_to_index(
             # not-yet-ledgered remainder alone; a clean re-delivery never
             # scans the index at all. At 100 TB a Bloom filter (M3) fronts
             # this probe, same semantics.
-            in_postings = spark.read.parquet(path).select("doc_id").distinct()
+            in_postings = read_parquet(spark, path).select("doc_id").distinct()
             postings_new = _doc_postings(fresh.join(in_postings, "doc_id", "left_anti"))
             # local persist (maintenance job, not the query-scoped tracker):
             # the batch postings feed up to two writes, and the stats ledger
@@ -336,13 +360,11 @@ def append_documents_to_index(
             finally:
                 postings_new.unpersist()
             fresh.select("doc_id").write.mode("append").parquet(ledger_path)
-        manifest_path = os.path.join(data_dir, "_SNAPSHOT.json")
-        with open(manifest_path) as f:
-            manifest = json.load(f)
-        manifest[FULLTEXT_INDEX]["n_docs"] = spark.read.parquet(ledger_path).count()
-        manifest[FULLTEXT_INDEX]["rows"] = spark.read.parquet(path).count()
-        write_json_atomic(manifest_path, manifest)
-    return {"docs_appended": n_new, "n_docs": manifest[FULLTEXT_INDEX]["n_docs"]}
+        n_docs = read_parquet(spark, ledger_path).count()
+        _update_manifest(
+            data_dir, FULLTEXT_INDEX, n_docs=n_docs, rows=read_parquet(spark, path).count()
+        )
+    return {"docs_appended": n_new, "n_docs": n_docs}
 
 
 def _run_maintenance_stream(
@@ -490,7 +512,7 @@ def build_trigram_index(
         .write.mode("overwrite")
         .parquet(path)
     )
-    idx = spark.read.parquet(path)
+    idx = read_parquet(spark, path)
     _write_trigram_stats(spark, idx, out_dir, mode="overwrite")
     return idx.count()
 
@@ -538,7 +560,7 @@ def append_parts_to_trigram_index(
     new_parts = new_parts.dropDuplicates(["p_partkey"])
     with _index_lock(path):
         heal_swap(path)
-        indexed = spark.read.parquet(path).select("p_partkey").distinct()
+        indexed = read_parquet(spark, path).select("p_partkey").distinct()
         fresh = new_parts.join(indexed, "p_partkey", "left_anti")
         n_new = fresh.count()
         if n_new:
@@ -583,11 +605,7 @@ def append_parts_to_trigram_index(
                     ).write.mode("append").parquet(path)
             finally:
                 trg.unpersist()
-        manifest_path = os.path.join(data_dir, "_SNAPSHOT.json")
-        with open(manifest_path) as f:
-            manifest = json.load(f)
-        manifest[TRIGRAM_INDEX]["rows"] = spark.read.parquet(path).count()
-        write_json_atomic(manifest_path, manifest)
+        _update_manifest(data_dir, TRIGRAM_INDEX, rows=read_parquet(spark, path).count())
     return {"parts_appended": n_new}
 
 
@@ -654,7 +672,7 @@ def compact_index(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        actual = _table_digest(spark.read.parquet(tmp))
+        actual = _table_digest(read_parquet(spark, tmp))
         if actual != expected:
             shutil.rmtree(tmp)
             raise RuntimeError(
@@ -720,11 +738,11 @@ def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -
     if not os.path.isdir(ledger_path):
         return {"ledger": "absent"}
     files_before = len(glob.glob(os.path.join(ledger_path, "*.parquet")))
-    src = spark.read.parquet(ledger_path)
+    src = read_parquet(spark, ledger_path)
     expected = _table_digest(src)
     tmp = ledger_path.rstrip("/") + REWRITE
     src.repartition(max(1, n_files // 4)).write.mode("overwrite").parquet(tmp)
-    actual = _table_digest(spark.read.parquet(tmp))
+    actual = _table_digest(read_parquet(spark, tmp))
     if actual != expected:
         shutil.rmtree(tmp)
         raise RuntimeError(
@@ -768,7 +786,7 @@ def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
     under-counted max_tf (or raised min_n_trgm) breaks the max-df guard's
     soundness (ledger max_tf ≥ every indexed tf, min_n_trgm ≤ the true
     minimum). Returns {ledger: rows}."""
-    idx = spark.read.parquet(table_path(data_dir, index_name))
+    idx = read_parquet(spark, table_path(data_dir, index_name))
     if index_name == FULLTEXT_INDEX:
         frames = {
             FULLTEXT_STATS: idx.groupBy("tok").agg(
@@ -788,7 +806,7 @@ def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
         path = table_path(data_dir, name)
         tmp = path.rstrip("/") + ".rebuilding"
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        out[name] = spark.read.parquet(tmp).count()
+        out[name] = read_parquet(spark, tmp).count()
         drop_dir(path)
         swap_in(tmp, path)
     return out
@@ -854,7 +872,7 @@ def fulltext_rank_maxdf(
     try:
         stat = {
             r["tok"]: (int(r["df"]), int(r["mtf"]))
-            for r in spark.read.parquet(stats_path)
+            for r in read_parquet(spark, stats_path)
             .filter(F.col("tok").isin(*terms))
             .groupBy("tok")
             .agg(F.sum("df_inc").alias("df"), F.max("max_tf").alias("mtf"))
@@ -886,7 +904,7 @@ def fulltext_rank_maxdf(
         info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
         return None, info
 
-    idx = spark.read.parquet(table_path(data_dir, FULLTEXT_INDEX))
+    idx = read_parquet(spark, table_path(data_dir, FULLTEXT_INDEX))
     # exact per-term df from the postings — the same counts the plain index
     # plan derives; ≤|terms| rows, footer-pruned scan, so collecting is free
     dfreq = {
@@ -976,7 +994,7 @@ def trigram_rank_from_index(
     q = _pg_trigrams([w for w in query.lower().split() if w])
     if not q:
         raise ValueError("query yields no trigrams")
-    idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX)).filter(
+    idx = read_parquet(spark, table_path(data_dir, TRIGRAM_INDEX)).filter(
         F.col("trgm").isin(*q)
     )
     inter = F.count("*")
@@ -1080,7 +1098,7 @@ def trigram_rank_maxdf(
         info["reason"] = "no stats ledgers"
         return None, info
     try:
-        meta = spark.read.parquet(meta_path).agg(
+        meta = read_parquet(spark, meta_path).agg(
             F.sum("n_parts_inc").alias("n_parts"), F.min("min_n_trgm").alias("min_n")
         ).collect()[0]
         if meta["n_parts"] is None or meta["min_n"] is None:
@@ -1088,7 +1106,7 @@ def trigram_rank_maxdf(
         n_parts, min_n = int(meta["n_parts"]), int(meta["min_n"])
         dfs = {
             r["trgm"]: int(r["df"])
-            for r in spark.read.parquet(stats_path)
+            for r in read_parquet(spark, stats_path)
             .filter(F.col("trgm").isin(*q))
             .groupBy("trgm")
             .agg(F.sum("df_inc").alias("df"))
@@ -1128,7 +1146,7 @@ def trigram_rank_maxdf(
         info["reason"] = f"candidate bound {cand_ub} > broadcast cap {MAXDF_BROADCAST_CAP}"
         return None, info
 
-    idx = spark.read.parquet(table_path(data_dir, TRIGRAM_INDEX))
+    idx = read_parquet(spark, table_path(data_dir, TRIGRAM_INDEX))
     # computed twice (broadcast keys + final join), deliberately
     # unpersisted — see fulltext_rank_maxdf: the rare subtree is
     # ledger-capped and map-side cheap; persisting it measured 2× slower
@@ -1178,7 +1196,7 @@ def fulltext_rank_from_index(
     layout stay append-only), one map-side-combined per-doc aggregate,
     sort-limit top-k. ``n_docs`` comes from the snapshot manifest.
     Proven row-identical to the scan-based plan in tests."""
-    idx = spark.read.parquet(table_path(data_dir, FULLTEXT_INDEX)).filter(
+    idx = read_parquet(spark, table_path(data_dir, FULLTEXT_INDEX)).filter(
         F.col("tok").isin(*terms)
     )
     return _rank_matched_postings(idx, topk, n_docs)
@@ -1231,7 +1249,7 @@ def fulltext_rank_from_sharded(
     shared code. Proven row-identical to `fulltext_rank_from_index` in
     tests, including on a hot-token corpus where one term spans many
     segments."""
-    seg = spark.read.parquet(table_path(data_dir, FULLTEXT_SHARDED)).filter(
+    seg = read_parquet(spark, table_path(data_dir, FULLTEXT_SHARDED)).filter(
         F.col("tok").isin(*terms)
     )
     idx = seg.select(
@@ -1258,7 +1276,7 @@ def snapshot_tables(
     for name, df in src.items():
         expected = _table_digest(df)
         df.write.mode("overwrite").parquet(table_path(out_dir, name))
-        actual = _table_digest(spark.read.parquet(table_path(out_dir, name)))
+        actual = _table_digest(read_parquet(spark, table_path(out_dir, name)))
         if actual != expected:
             raise RuntimeError(
                 f"snapshot verify failed for {name}: wrote {expected}, read back {actual}"
@@ -1269,7 +1287,11 @@ def snapshot_tables(
         manifest[FULLTEXT_SHARDED] = build_fulltext_index_sharded(spark, sf_dir, out_dir)
     if "part" in manifest:
         manifest[TRIGRAM_INDEX] = {"rows": build_trigram_index(spark, sf_dir, out_dir)}
-    write_json_atomic(os.path.join(out_dir, "_SNAPSHOT.json"), manifest)
+    manifest_path = os.path.join(out_dir, MANIFEST)
+    # under the manifest lock: an appender's read-modify-write of the old
+    # manifest must not land after this write and overwrite it
+    with _index_lock(manifest_path):
+        write_json_atomic(manifest_path, manifest)
     return manifest
 
 
@@ -1442,7 +1464,7 @@ class _Handler(BaseHTTPRequestHandler):
             if q.get("shard") == "1":
                 if not self._live_index(FULLTEXT_SHARDED):
                     raise ValueError("snapshot has no sharded fulltext index")
-                with open(os.path.join(d, "_SNAPSHOT.json")) as f:
+                with open(os.path.join(d, MANIFEST)) as f:
                     n_docs = json.load(f)[FULLTEXT_INDEX]["n_docs"]
                 self._send(
                     200, _rows_payload(fulltext_rank_from_sharded(spark, d, terms, k, n_docs))
@@ -1452,7 +1474,7 @@ class _Handler(BaseHTTPRequestHandler):
             # snapshot has one; ?scan=1 forces the corpus-scan plan (the
             # two are proven row-identical in tests)
             if "scan" not in q and self._live_index(FULLTEXT_INDEX):
-                with open(os.path.join(d, "_SNAPSHOT.json")) as f:
+                with open(os.path.join(d, MANIFEST)) as f:
                     n_docs = json.load(f)[FULLTEXT_INDEX]["n_docs"]
                 # max-df skip first (exact by its guard, or declines)
                 rows = None
@@ -1485,7 +1507,7 @@ class _Handler(BaseHTTPRequestHandler):
                 out = _rows_payload(api_plans.api_search_trigram(spark, d, query=q["q"], topk=k))
             self._send(200, out)
         elif path == "/health":
-            with open(os.path.join(d, "_SNAPSHOT.json")) as f:
+            with open(os.path.join(d, MANIFEST)) as f:
                 self._send(200, {"ok": True, "snapshot": json.load(f)})
         else:
             self._send(404, {"error": f"no route {path}"})

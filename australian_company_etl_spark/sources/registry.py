@@ -5,14 +5,39 @@ embeddings). At 100 TB each "table" would be a partitioned parquet dataset —
 `spark.read.parquet(dir)` is identical either way; filters/projections push
 down to the scan and partition pruning applies when the layout is
 `.../table/dt=.../part-*.parquet`.
+
+Every table read goes through `read_parquet`. A bare
+`spark.read.parquet(path)` starts one Spark job per call to infer the
+schema from a file footer (~100 ms locally), even when the directory has
+not changed since the last read; the serving routes read the same
+published tables on every request, so that job was up to half of a point
+lookup's jobs. `read_parquet` infers a path's schema once and passes it
+back through `spark.read.schema(s).parquet(path)`, which starts no job.
+The file listing still happens on every read, so appends and compaction
+swaps are seen exactly as before.
+
+The cache is keyed by file identity, not by path: the sorted
+(relative name, size, mtime_ns) of the data files Spark would list
+(`_`- and `.`-prefixed names are skipped, as Spark skips them). The same
+files have the same footers, so a cached schema is only ever returned
+for the files it was inferred from; any write, append or swap changes
+the key and the next read infers again, once. (Spark writes uniquely
+named part files; a file rewritten in place under its old name changes
+its size or mtime, unless it keeps its size within one filesystem
+timestamp tick.) One entry is kept per path (its latest key). If the
+listing fails (a file vanishes during a swap) the read falls back to
+plain inference; two threads missing at the same moment both infer,
+which is harmless, so no lock is taken.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -34,6 +59,59 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: absolute path -> (files key, schema inferred from those files)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _hidden(name: str) -> bool:
+    """Spark's `shouldFilterOutPathName`: names its file listing skips."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False  # parquet summary files, which inference may read
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _raise(exc: OSError) -> None:
+    raise exc
+
+
+def _files_key(path: str) -> tuple:
+    """Sorted (relative name, size, mtime_ns) of the data files behind
+    ``path``; raises OSError if any of them cannot be listed or stat'ed."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, files in os.walk(path, onerror=_raise):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for name in files:
+            if not _hidden(name):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without the schema-inference job when the
+    files behind ``path`` are the ones its cached schema was inferred from
+    (see the module docstring)."""
+    try:
+        key = _files_key(path)
+    except OSError:
+        return spark.read.parquet(path)
+    apath = os.path.abspath(path)
+    hit = _SCHEMAS.get(apath)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[apath] = (key, df.schema)
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
     # defensive: plans may receive an externally-built SparkSession (the
     # driver contract passes one in). events.parquet has carried either
@@ -49,7 +127,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     # `is None` test, NOT truthiness: an explicitly-empty list means "load
     # nothing", not "load all ten tables"
     for n in TABLES if names is None else names:
-        df = spark.read.parquet(table_path(sf_dir, n))
+        df = read_parquet(spark, table_path(sf_dir, n))
         ts_type = dict(df.dtypes).get("ts")
         if n == "events" and ts_type == "bigint":
             # TIMESTAMP(NANOS) read as epoch-nanos long (see session.py);

@@ -44,3 +44,20 @@ def registry_dfs_small(spark):
     import __spark_entry__ as entrymod
 
     return {name: fn(spark, SF_DIR) for name, fn in entrymod.queries().items()}
+
+
+def spark_jobs(spark, fn) -> list[str]:
+    """Names of the Spark jobs that ``fn()`` starts, in job-id order, read
+    from the driver's status store (kept even with the UI off). The
+    listener bus is drained on both sides so no finished job is missed."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs() -> dict[int, str]:
+        sc.listenerBus().waitUntilEmpty(60_000)
+        js = sc.statusStore().jobsList(None)
+        return {int(js.apply(i).jobId()): js.apply(i).name() for i in range(js.size())}
+
+    last = max(jobs(), default=-1)
+    fn()
+    after = jobs()
+    return [after[k] for k in sorted(after) if k > last]

@@ -1,0 +1,93 @@
+"""`sources.registry.read_parquet`: a table's schema is inferred once and
+reused while the files behind its path are unchanged. The cache is keyed
+by file identity, so these tests rewrite tables in place (same path, new
+schema) and check that every read sees the new files' schema."""
+
+from __future__ import annotations
+
+import errno
+import os
+
+import pytest
+
+from australian_company_etl_spark.sources import registry
+from australian_company_etl_spark.sources.registry import load_tables, read_parquet, table_path
+from tests.conftest import spark_jobs
+
+
+def _inference_jobs(spark, fn) -> int:
+    return sum(n.startswith("parquet at") for n in spark_jobs(spark, fn))
+
+
+def test_repeat_read_starts_no_job_and_rewrite_is_seen(spark, tmp_path):
+    """A repeat read of an unchanged directory starts no inference job; an
+    overwrite at the same path with an added column is inferred again and
+    `load_tables` returns the new schema and rows."""
+    d = str(tmp_path)
+    path = table_path(d, "nation")
+    spark.createDataFrame([(0, "A")], "n_nationkey bigint, n_name string").write.parquet(path)
+    assert load_tables(spark, d, ["nation"])["nation"].columns == ["n_nationkey", "n_name"]
+    assert _inference_jobs(spark, lambda: load_tables(spark, d, ["nation"])) == 0
+
+    spark.createDataFrame(
+        [(0, "A", 7)], "n_nationkey bigint, n_name string, n_regionkey bigint"
+    ).write.mode("overwrite").parquet(path)
+    nation = load_tables(spark, d, ["nation"])["nation"]
+    assert nation.columns == ["n_nationkey", "n_name", "n_regionkey"]
+    assert [tuple(r) for r in nation.collect()] == [(0, "A", 7)]
+
+
+@pytest.mark.parametrize("layout", ["directory", "file"])
+def test_file_rewritten_under_the_same_name_is_seen(spark, tmp_path, layout):
+    """A file rewritten in place under its old name (pyarrow, not Spark's
+    unique part names) changes size or mtime, so the next read infers the
+    new schema — as a part file in a table directory and as a table that
+    is a single file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path)
+    path = table_path(d, "nation")
+    target = path
+    if layout == "directory":
+        os.makedirs(path)
+        target = os.path.join(path, "part-0.parquet")
+    pq.write_table(pa.table({"n_nationkey": [0, 1]}), target)
+    assert load_tables(spark, d, ["nation"])["nation"].columns == ["n_nationkey"]
+
+    pq.write_table(pa.table({"n_nationkey": [0, 1], "n_name": ["A", "B"]}), target)
+    nation = load_tables(spark, d, ["nation"])["nation"]
+    assert nation.columns == ["n_nationkey", "n_name"]
+    assert sorted(tuple(r) for r in nation.collect()) == [(0, "A"), (1, "B")]
+
+    # same size, new column name: only the mtime tells the files apart
+    size = os.path.getsize(target)
+    mtime = os.stat(target).st_mtime_ns
+    pq.write_table(pa.table({"n_nationkey": [0, 1], "n_xxxx": ["A", "B"]}), target)
+    assert os.path.getsize(target) == size
+    os.utime(target, ns=(mtime + 10**9, mtime + 10**9))
+    assert read_parquet(spark, path).columns == ["n_nationkey", "n_xxxx"]
+
+
+def test_listing_failure_falls_back_to_a_plain_read(spark, tmp_path, monkeypatch):
+    """A file that vanishes while the directory is fingerprinted (an
+    `os.stat` FileNotFoundError, as during a compaction swap) must not fail
+    the read: it falls back to plain `spark.read.parquet`."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(10).repartition(2).write.parquet(path)
+    assert read_parquet(spark, path).count() == 10
+
+    real_stat = os.stat
+    failed: list[str] = []
+
+    def stat_once(p, *a, **kw):
+        if not failed and str(p).startswith(path):
+            failed.append(str(p))
+            raise FileNotFoundError(errno.ENOENT, "vanished", str(p))
+        return real_stat(p, *a, **kw)
+
+    monkeypatch.setattr(registry.os, "stat", stat_once)
+    assert read_parquet(spark, path).count() == 10
+    assert failed
+    monkeypatch.undo()
+    assert read_parquet(spark, path).count() == 10

@@ -1900,3 +1900,127 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
         api.build_fulltext_index(spark, docs_dir, ft)
     monkeypatch.undo()
     assert not os.path.exists(table_path(ft, api.FULLTEXT_STATS))
+
+
+#: Spark jobs per repeated request once the schemas of every table and
+#: index a route reads are cached: the plan's own jobs and nothing else
+#: (an uncached read adds one `parquet at ...` inference job per table or
+#: index the route touches)
+_WARM_ROUTE_JOBS = [
+    (f"/companies/{api_plans.LOOKUP_KEY}", 2, 2),  # nation broadcast + collect
+    (f"/companies/by_state?state={api_plans.STATE_NAME}", 2, 2),
+    (f"/companies/search?q={api_plans.SEARCH_PATTERN}", 1, 1),
+    (f"/companies?after={api_plans.PAGE_AFTER}&limit={api_plans.PAGE_SIZE}", 1, 1),
+    ("/search?q=" + "+".join(api_plans.FT_QUERY_TERMS), 1, 6),
+    (f"/fuzzy?q={api_plans.TRGM_QUERY.replace(' ', '+')}", 1, 6),
+]
+
+
+@pytest.mark.parametrize("path,lo,hi", _WARM_ROUTE_JOBS)
+def test_repeated_route_starts_no_schema_inference_job(spark, server, path, lo, hi):
+    """A route repeated over an unchanged snapshot must pay only its plan's
+    jobs: `read_parquet` infers each table's schema once, so no `parquet
+    at ...` (footer inference) job may run on the repeat."""
+    from tests.conftest import spark_jobs
+
+    status, _ = _get(server, path)
+    assert status == 200
+    names = spark_jobs(spark, lambda: _get(server, path))
+    assert not [n for n in names if n.startswith("parquet at")], names
+    assert lo <= len(names) <= hi, names
+
+
+def test_search_after_append_and_compaction_equals_scan(spark, tmp_path):
+    """The schema cache must never hide a change to the files: with every
+    table and index of `/search` and `/search?scan=1` already read once,
+    append documents (to the snapshot's table and, through
+    `append_documents_to_index`, to the index), then compact the index;
+    after each step the index answer must equal the scan plan's."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import load_tables, table_path
+
+    snap = str(tmp_path / "snap")
+    snapshot_tables(spark, SF_DIR, snap, tables=["documents"])
+    srv = make_server(spark, snap)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    serve_in_thread(srv)
+    path = "/search?q=data+document+order&k=15"
+
+    def index_equals_scan() -> list:
+        s_i, idx = _get(base, path)
+        s_s, scan = _get(base, path + "&scan=1")
+        assert s_i == s_s == 200
+        assert idx["n"] > 0
+        assert idx["rows"] == scan["rows"]
+        return idx["rows"]
+
+    try:
+        before = index_equals_scan()
+        docs = load_tables(spark, SF_DIR, ["documents"])["documents"]
+        new = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
+            "doc_id", F.col("doc_id") + 10**6
+        )
+        new.write.mode("append").parquet(table_path(snap, "documents"))
+        assert api.append_documents_to_index(spark, new, snap)["docs_appended"] > 0
+        after_append = index_equals_scan()
+        assert after_append != before
+        out = api.compact_index(spark, snap, api.FULLTEXT_INDEX, "tok")
+        assert out["ok"] and os.path.isdir(table_path(snap, api.FULLTEXT_INDEX))
+        assert index_equals_scan() == after_append
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_concurrent_appends_to_both_indexes_keep_every_manifest_update(spark, tmp_path):
+    """The full-text and trigram appenders each read-modify-write the one
+    `_SNAPSHOT.json`; run side by side they must not lose either update:
+    the manifest's trigram row count and full-text n_docs must equal the
+    index and doc-ledger counts after every trial."""
+    import json
+    import os
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import load_tables, table_path
+
+    snap = str(tmp_path / "snap")
+    snapshot_tables(spark, SF_DIR, snap, tables=["documents", "part"])
+    t = load_tables(spark, SF_DIR, ["documents", "part"])
+    docs = t["documents"].select("doc_id", "text")
+    parts = t["part"].select("p_partkey", "p_name")
+    for trial in range(1, 4):
+        shift = trial * 10**6
+        jobs = [
+            (api.append_documents_to_index, docs.withColumn("doc_id", F.col("doc_id") + shift)),
+            (api.append_parts_to_trigram_index,
+             parts.withColumn("p_partkey", F.col("p_partkey") + shift)),
+        ]
+        start = threading.Barrier(len(jobs))
+        errors: list[BaseException] = []
+
+        def run(fn, batch):
+            try:
+                start.wait()
+                fn(spark, batch, snap)
+            except BaseException as exc:  # noqa: BLE001 — re-raised below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=run, args=job) for job in jobs]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+        assert not errors, errors
+        with open(os.path.join(snap, "_SNAPSHOT.json")) as f:
+            manifest = json.load(f)
+        trigram_rows = spark.read.parquet(table_path(snap, api.TRIGRAM_INDEX)).count()
+        ledger_docs = spark.read.parquet(table_path(snap, api.FULLTEXT_DOCS)).count()
+        assert manifest[api.TRIGRAM_INDEX]["rows"] == trigram_rows, trial
+        assert manifest[api.FULLTEXT_INDEX]["n_docs"] == ledger_docs, trial
