@@ -19,6 +19,8 @@ Spark-first posture:
   pipeline must not recompute yesterday's good stages.
 - The run ledger (`_RUN_LEDGER.json`) records status + attempts + rows per
   task per run, the runner's analog of Airflow's task-instance table.
+  Rows are summed from the committed files' parquet footers
+  (`registry.parquet_rows`), not counted by re-reading the output.
 
 Interval scheduling (`@daily` + catchup, the reference's
 ``schedule_interval``/``catchup`` declaration) lives in
@@ -37,6 +39,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from australian_company_etl_spark.sources.publish import write_json_atomic
+from australian_company_etl_spark.sources.registry import parquet_rows, read_parquet
 
 LEDGER_NAME = "_RUN_LEDGER.json"
 
@@ -126,11 +129,11 @@ def _run_one(spark: SparkSession, task: Task, out_dir: str) -> TaskResult:
     for attempt in range(1 + task.retries):
         res.attempts = attempt + 1
         try:
-            inputs = {d: spark.read.parquet(task_output_path(out_dir, d)) for d in task.deps}
+            inputs = {d: read_parquet(spark, task_output_path(out_dir, d)) for d in task.deps}
             df = task.build(spark, inputs)
             df.write.mode("overwrite").parquet(path)
+            res.rows = parquet_rows(path)
             res.status = "success"
-            res.rows = spark.read.parquet(path).count()
             res.error = None
             break
         except Exception as exc:  # noqa: BLE001 — retry semantics need the catch

@@ -53,11 +53,14 @@ from australian_company_etl_spark.sources.publish import (
     drop_dir,
     heal_swap,
     swap_in,
+    write_digested,
     write_json_atomic,
 )
-# module-global name: tests patch it to corrupt a compaction's verify
+# module-global name: tests patch it to corrupt a publish's or compaction's verify
 from australian_company_etl_spark.sources.publish import table_digest as _table_digest
-from australian_company_etl_spark.sources.registry import load_tables, read_parquet, table_path
+from australian_company_etl_spark.sources.registry import (
+    load_tables, parquet_rows, read_parquet, table_path,
+)
 
 #: tables the D-family routes read; the snapshot contains exactly these.
 SERVING_TABLES = ["customer", "nation", "part", "documents"]
@@ -134,10 +137,6 @@ def _index_lock(path: str, timeout: float = 60.0):
         os.close(fd)
 
 
-#: the former name of `heal_swap`, kept for callers outside this module
-heal_interrupted_compaction = heal_swap
-
-
 def _update_manifest(data_dir: str, index_name: str, **values) -> None:
     """Set ``values`` on the manifest entry of ``index_name``. The manifest
     is one file shared by every index, so its read-modify-write holds the
@@ -203,11 +202,10 @@ def build_fulltext_index(
     tf.repartitionByRange(n_files, "tok").sortWithinPartitions("tok").write.mode(
         "overwrite"
     ).parquet(path)
-    ledger = docs.select("doc_id").distinct()
-    ledger.write.mode("overwrite").parquet(table_path(out_dir, FULLTEXT_DOCS))
-    n_docs = read_parquet(spark, table_path(out_dir, FULLTEXT_DOCS)).count()
-    _write_fulltext_stats(spark, read_parquet(spark, path), out_dir, mode="overwrite")
-    return {"rows": read_parquet(spark, path).count(), "n_docs": n_docs}
+    ledger_path = table_path(out_dir, FULLTEXT_DOCS)
+    docs.select("doc_id").distinct().write.mode("overwrite").parquet(ledger_path)
+    _write_ledgers(out_dir, FULLTEXT_INDEX, read_parquet(spark, path))
+    return {"rows": parquet_rows(path), "n_docs": parquet_rows(ledger_path)}
 
 
 def _shard_segments(tf: DataFrame, shard_docs: int) -> DataFrame:
@@ -253,8 +251,7 @@ def build_fulltext_index_sharded(
     seg.repartitionByRange(n_files, "tok").sortWithinPartitions(
         "tok", "shard_id"
     ).write.mode("overwrite").parquet(path)
-    n = read_parquet(spark, path).count()
-    return {"rows": n, "shard_docs": shard_docs}
+    return {"rows": parquet_rows(path), "shard_docs": shard_docs}
 
 
 def append_documents_to_sharded(
@@ -277,7 +274,7 @@ def append_documents_to_sharded(
     seg.repartitionByRange(2, "tok").sortWithinPartitions("tok", "shard_id").write.mode(
         "append"
     ).parquet(path)
-    return {"segments_appended": read_parquet(spark, path).count()}
+    return {"segments_appended": parquet_rows(path)}
 
 
 def append_documents_to_index(
@@ -353,17 +350,15 @@ def append_documents_to_index(
                     # reverse order could leave max_tf UNDER the indexed
                     # max, breaking the exactness guard.
                     if os.path.exists(table_path(data_dir, FULLTEXT_STATS)):
-                        _write_fulltext_stats(spark, postings_new, data_dir, mode="append")
+                        _write_ledgers(data_dir, FULLTEXT_INDEX, postings_new)
                     postings_new.repartitionByRange(2, "tok").sortWithinPartitions(
                         "tok"
                     ).write.mode("append").parquet(path)
             finally:
                 postings_new.unpersist()
             fresh.select("doc_id").write.mode("append").parquet(ledger_path)
-        n_docs = read_parquet(spark, ledger_path).count()
-        _update_manifest(
-            data_dir, FULLTEXT_INDEX, n_docs=n_docs, rows=read_parquet(spark, path).count()
-        )
+        n_docs = parquet_rows(ledger_path)
+        _update_manifest(data_dir, FULLTEXT_INDEX, n_docs=n_docs, rows=parquet_rows(path))
     return {"docs_appended": n_new, "n_docs": n_docs}
 
 
@@ -512,32 +507,31 @@ def build_trigram_index(
         .write.mode("overwrite")
         .parquet(path)
     )
-    idx = read_parquet(spark, path)
-    _write_trigram_stats(spark, idx, out_dir, mode="overwrite")
-    return idx.count()
+    _write_ledgers(out_dir, TRIGRAM_INDEX, read_parquet(spark, path))
+    return parquet_rows(path)
 
 
-def _write_trigram_meta(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
-    """One (n_parts_inc, min_n_trgm) ledger row for a postings batch."""
-    meta = postings.select("p_partkey", "n_trgm").distinct().agg(
-        F.count("*").alias("n_parts_inc"),
-        F.min("n_trgm").alias("min_n_trgm"),
-    )
-    meta.coalesce(1).write.mode(mode).parquet(table_path(data_dir, TRIGRAM_META))
+def _ledger_frames(index_name: str, postings: DataFrame) -> dict[str, DataFrame]:
+    """{ledger name: the rows describing ``postings``} for each probe-stat
+    ledger of ``index_name`` (FULLTEXT_STATS; TRIGRAM_STATS, TRIGRAM_META)."""
+    if index_name == FULLTEXT_INDEX:
+        return {
+            FULLTEXT_STATS: postings.groupBy("tok").agg(
+                F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
+            )
+        }
+    return {
+        TRIGRAM_STATS: postings.groupBy("trgm").agg(F.count("*").alias("df_inc")),
+        TRIGRAM_META: postings.select("p_partkey", "n_trgm").distinct().agg(
+            F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm")
+        ),
+    }
 
 
-def _write_trigram_df_stats(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
-    """(trgm, df_inc) ledger rows for a postings batch."""
-    stats = postings.groupBy("trgm").agg(F.count("*").alias("df_inc"))
-    stats.coalesce(1).write.mode(mode).parquet(table_path(data_dir, TRIGRAM_STATS))
-
-
-def _write_trigram_stats(spark: SparkSession, postings: DataFrame, data_dir: str, mode: str) -> None:
-    """Publish the max-df probe statistics for a postings batch (see
-    TRIGRAM_STATS/TRIGRAM_META). Build-time path; the append path issues
-    the same two writes before its postings append."""
-    _write_trigram_meta(spark, postings, data_dir, mode)
-    _write_trigram_df_stats(spark, postings, data_dir, mode)
+def _write_ledgers(data_dir: str, index_name: str, postings: DataFrame) -> None:
+    """Append a postings batch's ledger rows (creating those a build dropped)."""
+    for name, df in _ledger_frames(index_name, postings).items():
+        df.coalesce(1).write.mode("append").parquet(table_path(data_dir, name))
 
 
 def append_parts_to_trigram_index(
@@ -594,18 +588,15 @@ def append_parts_to_trigram_index(
                     # (its anti-join reads the index), so a ledger write
                     # issued afterwards would recompute against the
                     # post-append index and see an empty batch.
-                    has_stats = os.path.exists(
-                        table_path(data_dir, TRIGRAM_STATS)
-                    ) and os.path.exists(table_path(data_dir, TRIGRAM_META))
-                    if has_stats:
-                        _write_trigram_meta(spark, trg, data_dir, mode="append")
-                        _write_trigram_df_stats(spark, trg, data_dir, mode="append")
+                    ledgers = (TRIGRAM_STATS, TRIGRAM_META)
+                    if all(os.path.exists(table_path(data_dir, n)) for n in ledgers):
+                        _write_ledgers(data_dir, TRIGRAM_INDEX, trg)
                     trg.repartitionByRange(2, "trgm").sortWithinPartitions(
                         "trgm"
                     ).write.mode("append").parquet(path)
             finally:
                 trg.unpersist()
-        _update_manifest(data_dir, TRIGRAM_INDEX, rows=read_parquet(spark, path).count())
+        _update_manifest(data_dir, TRIGRAM_INDEX, rows=parquet_rows(path))
     return {"parts_appended": n_new}
 
 
@@ -652,9 +643,9 @@ def compact_index(
     with _index_lock(path.rstrip("/") + ".compact", timeout=1.0):
         # patient timeout on the INDEX lock even for this listing phase:
         # appenders legitimately hold it across several Spark jobs
-        # (membership anti-joins, parquet writes, two full-index counts for
-        # the manifest), which can exceed 60s on a larger corpus — dying
-        # here before doing any work would starve the cron'd compaction
+        # (membership anti-joins, the ledger and postings writes), which
+        # can exceed 60s on a larger corpus — dying here before doing any
+        # work would starve the cron'd compaction
         with _index_lock(path, timeout=600.0):
             # clean_tmp is safe ONLY here: concurrent compactions of one
             # index are excluded by the compaction flock above
@@ -756,27 +747,12 @@ def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -
     }
 
 
-def _write_fulltext_stats(
-    spark: SparkSession, postings: DataFrame, data_dir: str, mode: str
-) -> None:
-    """(tok, df_inc, max_tf) probe-stat ledger rows for a postings batch
-    (see FULLTEXT_STATS). df is the SUM of a token's rows, max_tf the MAX —
-    both merge-monotone, so append-only maintenance is exact modulo the
-    crash-inflation the probe's bound tolerates."""
-    stats = postings.groupBy("tok").agg(
-        F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
-    )
-    stats.coalesce(1).write.mode(mode).parquet(table_path(data_dir, FULLTEXT_STATS))
-
-
 def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
-    """Compaction-time wholesale REBUILD of an index's probe-stat ledgers
-    from the (just-compacted) postings — every ledger value is derivable
-    from them (df = count per term, max_tf = max tf, n_parts = distinct
-    parts, min_n_trgm = min over the stored per-part counts), so the
-    rebuild is both the fold and the heal: torn, absent and crash-inflated
-    states all converge to exact values here, and pre-stats snapshots gain
-    the ledgers at their first compaction. Caller holds the index lock (no
+    """Compaction-time wholesale REBUILD of an index's probe-stat ledgers:
+    `_ledger_frames` over the whole (just-compacted) postings. The rebuild
+    is both the fold and the heal: torn, absent and crash-inflated states
+    all converge to exact values here, and pre-stats snapshots gain the
+    ledgers at their first compaction. Caller holds the index lock (no
     concurrent appender can write ledger rows the swap would drop).
 
     Each ledger is dropped (`drop_dir`) before its rebuild is renamed in,
@@ -787,26 +763,12 @@ def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
     soundness (ledger max_tf ≥ every indexed tf, min_n_trgm ≤ the true
     minimum). Returns {ledger: rows}."""
     idx = read_parquet(spark, table_path(data_dir, index_name))
-    if index_name == FULLTEXT_INDEX:
-        frames = {
-            FULLTEXT_STATS: idx.groupBy("tok").agg(
-                F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
-            )
-        }
-    else:
-        parts = idx.select("p_partkey", "n_trgm").distinct()
-        frames = {
-            TRIGRAM_STATS: idx.groupBy("trgm").agg(F.count("*").alias("df_inc")),
-            TRIGRAM_META: parts.agg(
-                F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm")
-            ),
-        }
     out = {}
-    for name, df in frames.items():
+    for name, df in _ledger_frames(index_name, idx).items():
         path = table_path(data_dir, name)
         tmp = path.rstrip("/") + ".rebuilding"
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        out[name] = read_parquet(spark, tmp).count()
+        out[name] = parquet_rows(tmp)
         drop_dir(path)
         swap_in(tmp, path)
     return out
@@ -1268,14 +1230,14 @@ def snapshot_tables(
     Writes each backing table to ``{out_dir}/{table}.parquet`` (a parquet
     directory — `table_path` addressing, so the D plans point at the
     snapshot with ``sf_dir=out_dir`` unchanged) and fails loudly if any
-    re-read digest disagrees with the source — a torn publish never
-    serves. Returns ``{table: {"rows": n, "content_hash": h}}``."""
+    re-read digest disagrees with the one observed while writing it
+    (`write_digested`) — a torn publish never serves. Returns
+    ``{table: {"rows": n, "content_hash": h}}``."""
     os.makedirs(out_dir, exist_ok=True)
     src = load_tables(spark, sf_dir, tables or SERVING_TABLES)
     manifest = {}
     for name, df in src.items():
-        expected = _table_digest(df)
-        df.write.mode("overwrite").parquet(table_path(out_dir, name))
+        expected = write_digested(df, table_path(out_dir, name))
         actual = _table_digest(read_parquet(spark, table_path(out_dir, name)))
         if actual != expected:
             raise RuntimeError(

@@ -30,6 +30,13 @@ or one that a later call heals — never a torn one:
   all columns in NAME order (a re-read moves partition columns to the
   end, so positional order is not stable). Manifests on disk store these
   values, so the expression must not change.
+- `write_digested`: the same digest, observed DURING a write
+  (``DataFrame.observe``) instead of in a separate pass over the source;
+  the snapshot publish then re-reads what it wrote with `table_digest`.
+  Compaction keeps its separate source pass: a shuffle sits between its
+  source and writer, and observing above it would leave the shuffle
+  unchecked, while below a ``repartitionByRange`` every row counts twice
+  (the range-bound sampling job runs the same child plan).
 """
 
 from __future__ import annotations
@@ -38,7 +45,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 BACKUP = ".precompact"
@@ -107,7 +114,21 @@ def row_hash(df: DataFrame) -> Column:
     return F.crc32(F.concat_ws("\x1f", *[df[c].cast("string") for c in sorted(df.columns)]))
 
 
+def _digest_aggs(df: DataFrame) -> list[Column]:
+    return [F.count("*").alias("rows"), F.sum(row_hash(df)).alias("h")]
+
+
+def _as_digest(r) -> tuple[int, int]:
+    return int(r["rows"]), int(r["h"] or 0)
+
+
 def table_digest(df: DataFrame) -> tuple[int, int]:
     """(rows, content hash) in one aggregate pass."""
-    r = df.agg(F.count("*").alias("rows"), F.sum(row_hash(df)).alias("h")).collect()[0]
-    return int(r["rows"]), int(r["h"] or 0)
+    return _as_digest(df.agg(*_digest_aggs(df)).collect()[0])
+
+
+def write_digested(df: DataFrame, path: str) -> tuple[int, int]:
+    """Overwrite ``path`` with ``df``; return its `table_digest` (module doc)."""
+    obs = Observation()
+    df.observe(obs, *_digest_aggs(df)).write.mode("overwrite").parquet(path)
+    return _as_digest(obs.get)

@@ -112,6 +112,20 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def parquet_rows(path: str) -> int:
+    """Rows behind ``path`` with no Spark job, for a publish step counting
+    what it wrote: the footers' `num_rows` over exactly the files
+    `_files_key` lists, minus `_metadata`/`_common_metadata` summaries. A
+    listing or footer error (a file vanished) raises, never a partial sum."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, rel) if rel else path).num_rows
+        for rel, _size, _mtime in _files_key(path)
+        if not os.path.basename(rel).startswith(("_metadata", "_common_metadata"))
+    )
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
     # defensive: plans may receive an externally-built SparkSession (the
     # driver contract passes one in). events.parquet has carried either

@@ -22,7 +22,7 @@ replaces the live index. A crontab pairing `stream` (frequent) with
 safe: appenders and the compaction swap exclude each other via the index
 lock file, a batch appended during a compaction rewrite is re-diffed into
 the new layout at swap time, and every entry point first rolls back a
-swap that died between its two renames (heal_interrupted_compaction).
+swap that died between its two renames (heal_swap).
 Only compactions of the SAME index must not overlap each other.
 """
 

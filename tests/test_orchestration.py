@@ -61,6 +61,21 @@ def test_reference_dag_end_to_end_equals_composed_plan(spark, sf_dir, tmp_path):
     assert staged == composed
 
 
+def test_warm_reference_dag_counts_rows_from_footers(spark, sf_dir, tmp_path):
+    """Each task's ledger `rows` is its output's parquet-footer row count,
+    equal to what Spark reads back, so a warm run of the reference DAG
+    starts no job to count what it wrote: at most 14 jobs in all."""
+    from tests.conftest import spark_jobs
+
+    run_dag(spark, reference_dag(sf_dir), str(tmp_path / "warm"))
+    out = str(tmp_path / "run")
+    results = {}
+    names = spark_jobs(spark, lambda: results.update(run_dag(spark, reference_dag(sf_dir), out)))
+    assert len(names) <= 14, names
+    for name, r in results.items():
+        assert r.rows == spark.read.parquet(task_output_path(out, name)).count() > 0
+
+
 def test_rerun_skips_committed_tasks(spark, sf_dir, tmp_path):
     out = str(tmp_path / "run")
     run_dag(spark, reference_dag(sf_dir), out)

@@ -91,3 +91,74 @@ def test_listing_failure_falls_back_to_a_plain_read(spark, tmp_path, monkeypatch
     assert failed
     monkeypatch.undo()
     assert read_parquet(spark, path).count() == 10
+
+
+def test_parquet_rows_equals_a_spark_count(spark, tmp_path):
+    """`registry.parquet_rows` sums the footers of exactly the files Spark
+    reads, with no Spark job: it equals `read_parquet(...).count()` on a
+    flat directory, a `key=value`-partitioned one, after an append and
+    after a `compact_index` swap. `_SUCCESS`, `.crc` and a
+    `_common_metadata` summary (here a copy of a data file, so counting it
+    would show) are not counted."""
+    import glob
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from australian_company_etl_spark.serving.http_api import compact_index
+
+    flat = table_path(str(tmp_path), "flat")
+    spark.range(100).repartition(3).write.parquet(flat)
+    parted = table_path(str(tmp_path), "parted")
+    spark.range(50).withColumn("k", F.col("id") % 3).write.partitionBy("k").parquet(parted)
+    part = sorted(glob.glob(os.path.join(flat, "part-*.parquet")))[0]
+    shutil.copy(part, os.path.join(flat, "_common_metadata"))
+    assert os.path.exists(os.path.join(flat, "_SUCCESS"))
+    assert glob.glob(os.path.join(flat, ".*.crc"))
+
+    def same_count(path: str, rows: int) -> None:
+        assert spark_jobs(spark, lambda: registry.parquet_rows(path)) == []
+        assert registry.parquet_rows(path) == read_parquet(spark, path).count() == rows
+
+    same_count(flat, 100)
+    same_count(parted, 50)
+    spark.range(100, 107).write.mode("append").parquet(flat)
+    same_count(flat, 107)
+
+    d = str(tmp_path)
+    toy = table_path(d, "toy")
+    for lo in (0, 30, 60):
+        spark.range(lo, lo + 30).withColumn("tok", F.col("id") % 7).write.mode(
+            "append"
+        ).parquet(toy)
+    assert compact_index(spark, d, "toy", "tok", n_files=2)["ok"]
+    same_count(toy, 90)
+
+
+@pytest.mark.parametrize("when", ["listing", "footer"])
+def test_parquet_rows_raises_when_a_file_vanishes(spark, tmp_path, monkeypatch, when):
+    """A file that vanishes while `parquet_rows` lists the directory (the
+    `os.stat` of the listing) or before its footer is read must raise, not
+    return the sum of the files that are left."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(10).repartition(2).write.parquet(path)
+    if when == "listing":
+        real_stat = os.stat
+
+        def stat(p, *a, **kw):
+            if str(p).startswith(path) and str(p).endswith(".parquet") and p != path:
+                raise FileNotFoundError(errno.ENOENT, "vanished", str(p))
+            return real_stat(p, *a, **kw)
+
+        monkeypatch.setattr(registry.os, "stat", stat)
+    else:
+        real_key = registry._files_key
+
+        def key_then_vanish(p):
+            key = real_key(p)
+            os.remove(os.path.join(p, key[0][0]))
+            return key
+
+        monkeypatch.setattr(registry, "_files_key", key_then_vanish)
+    with pytest.raises(OSError):
+        registry.parquet_rows(path)

@@ -252,22 +252,68 @@ def test_incremental_trigram_index_equals_full_corpus(spark, tmp_path):
 
 
 def test_torn_snapshot_publish_fails_loudly(spark, tmp_path, monkeypatch):
-    """A publish whose re-read digest disagrees with the source must
-    raise, never serve — corrupt a table's re-read digest and assert the
+    """A publish whose re-read digest disagrees with the one observed
+    during the write must raise, never serve — corrupt the re-read digest
+    (the module's only `_table_digest` call in a publish) and assert the
     verify step catches it."""
     import australian_company_etl_spark.serving.http_api as api
 
     real = api._table_digest
-    calls = {"n": 0}
 
     def corrupted(df):
-        calls["n"] += 1
         rows, h = real(df)
-        return (rows, h + 1) if calls["n"] % 2 == 0 else (rows, h)  # re-read side lies
+        return rows, h + 1
 
     monkeypatch.setattr(api, "_table_digest", corrupted)
     with pytest.raises(RuntimeError, match="snapshot verify failed"):
         api.snapshot_tables(spark, SF_DIR, str(tmp_path / "snap"), tables=["nation"])
+
+
+def test_snapshot_manifest_digests_equal_the_source_tables(spark, tmp_path):
+    """The manifest's `rows` and `content_hash` are observed while each
+    table is written; they must equal `table_digest` of the source table,
+    as must the observed digest of a frame with no partitions."""
+    from australian_company_etl_spark.sources.publish import table_digest, write_digested
+    from australian_company_etl_spark.sources.registry import load_tables
+
+    tables = ["customer", "documents"]
+    manifest = snapshot_tables(spark, SF_DIR, str(tmp_path / "snap"), tables=tables)
+    for name, df in load_tables(spark, SF_DIR, tables).items():
+        assert (manifest[name]["rows"], manifest[name]["content_hash"]) == table_digest(df)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), "k bigint, v string")
+    assert empty.rdd.getNumPartitions() == 0
+    assert write_digested(empty, str(tmp_path / "empty.parquet")) == table_digest(empty) == (0, 0)
+
+
+def test_warm_publish_and_append_job_counts(spark, tmp_path):
+    """Publish steps count what they wrote from parquet footers, not by
+    re-reading it, and the snapshot takes each table's expected digest
+    during the write. Warm job counts: at most 40 for `snapshot_tables`,
+    20 for a fresh 100-document append and 4 for its re-delivery, which
+    changes nothing."""
+    import pathlib
+
+    from australian_company_etl_spark.serving import http_api as api
+    from tests.conftest import spark_jobs
+
+    api.snapshot_tables(spark, SF_DIR, str(tmp_path / "warm"))
+    snap = str(tmp_path / "snap")
+    names = spark_jobs(spark, lambda: api.snapshot_tables(spark, SF_DIR, snap))
+    assert len(names) <= 40, names
+
+    def batch(first: int):
+        rows = [(first + i, f"fresh batch words doc{first + i} alpha{i % 9}") for i in range(100)]
+        return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+    api.append_documents_to_index(spark, batch(10**7), snap)
+    fresh = batch(2 * 10**7)
+    names = spark_jobs(spark, lambda: api.append_documents_to_index(spark, fresh, snap))
+    assert len(names) <= 20, names
+    manifest = pathlib.Path(snap, "_SNAPSHOT.json")
+    before = manifest.read_text()
+    names = spark_jobs(spark, lambda: api.append_documents_to_index(spark, fresh, snap))
+    assert len(names) <= 4, names
+    assert manifest.read_text() == before
 
 
 def test_trigram_fuzzy(server, con):
@@ -755,7 +801,7 @@ def test_interrupted_compaction_swap_heals(spark, tmp_path):
     assert not os.path.exists(idx_path)
 
     # compact-side healing (clean_tmp): rollback + orphan rewrite discarded
-    assert api.heal_interrupted_compaction(idx_path, clean_tmp=True) == "rolled_back"
+    assert api.heal_swap(idx_path, clean_tmp=True) == "rolled_back"
     assert spark.read.parquet(idx_path).count() == n_before
     assert not os.path.exists(idx_path + ".precompact")
     assert not os.path.exists(idx_path + ".compacting")
@@ -763,7 +809,7 @@ def test_interrupted_compaction_swap_heals(spark, tmp_path):
     # appender-side healing (default): a .compacting dir may be a LIVE
     # compaction's in-flight rewrite — it must be left alone
     os.makedirs(idx_path + ".compacting")
-    assert api.heal_interrupted_compaction(idx_path) is None
+    assert api.heal_swap(idx_path) is None
     assert os.path.exists(idx_path + ".compacting")
     import shutil as _sh
 
@@ -772,7 +818,7 @@ def test_interrupted_compaction_swap_heals(spark, tmp_path):
     # crash AFTER the second rename but before cleanup: live is the new
     # data, .precompact is the leftover — healing must keep live and clean
     shutil.copytree(idx_path, idx_path + ".precompact")
-    assert api.heal_interrupted_compaction(idx_path) == "cleaned_precompact"
+    assert api.heal_swap(idx_path) == "cleaned_precompact"
     assert spark.read.parquet(idx_path).count() == n_before
 
     # make_server runs the same healing at startup
@@ -1876,7 +1922,7 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
     def boom(*a, **kw):
         raise RuntimeError("crash before stats write")
 
-    monkeypatch.setattr(api, "_write_trigram_stats", boom)
+    monkeypatch.setattr(api, "_write_ledgers", boom)
     with pytest.raises(RuntimeError):
         api.build_trigram_index(spark, small_dir, d)
     monkeypatch.undo()
@@ -1895,7 +1941,7 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
     docs_dir = str(tmp_path / "docs_small")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     docs.filter(F.col("doc_id") <= 5).write.parquet(docs_dir + "/documents.parquet")
-    monkeypatch.setattr(api, "_write_fulltext_stats", boom)
+    monkeypatch.setattr(api, "_write_ledgers", boom)
     with pytest.raises(RuntimeError):
         api.build_fulltext_index(spark, docs_dir, ft)
     monkeypatch.undo()
