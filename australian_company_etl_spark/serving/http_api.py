@@ -17,19 +17,22 @@ actually has:
    DuckDB oracles, so route semantics are gate-checked by construction.
 
 Scale posture: every route is a pushed-down point/top-k plan (keyset
-pagination D4, broadcast dim joins D1/D3, sort-limit top-k D5/D6), never
-an OFFSET walk or full collect. Every table and index is read through
-`sources.registry.read_parquet`, so a request over an unchanged snapshot
-pays its plan's Spark jobs and no schema-inference job. Jobs per warm
-request: `/companies/{key}` 2 (the nation broadcast and the collect),
-`/companies/by_state` 2, `/companies/search` 1, `/companies` 1, and at
-most 6 each for `/search` and `/fuzzy` (of which the max-df skip, when
-it declines after reading its ledgers, spends 2 and 4). On a real
-cluster the snapshot lives in object storage; latency-critical keys
-would additionally be fronted by a key-value projection of the same
-snapshot — the routes and their semantics (and this module's tests) stay
-identical. The stdlib server is deliberately dependency-free (no FastAPI
-in the sandbox); it is the protocol shim, not the engine.
+pagination D4, the 25-row nation dimension folded into D1/D3 as
+literals, sort-limit top-k D5/D6), never an OFFSET walk or full collect.
+Every table and index is read through `sources.registry.read_parquet`,
+so a request over an unchanged snapshot pays its plan's Spark jobs and
+no schema-inference job; small metadata the driver can answer itself
+(the nation rows, the max-df probe-stat ledgers) is read with pyarrow
+(`registry.parquet_columns`) and starts no job at all. Jobs per warm
+request: `/companies/{key}` 1 (the collect), `/companies/by_state` 1,
+`/companies/search` 1, `/companies` 1, and at most 4 for `/search` and
+2 for `/fuzzy` when the max-df skip declines before its candidate
+probe (its ledger reads start none). On a real cluster the snapshot
+lives in object storage; latency-critical keys could additionally be
+fronted by a key-value projection of the same snapshot — the routes and
+their semantics (and this module's tests) stay identical. The stdlib
+server is deliberately dependency-free (no FastAPI in the sandbox); it is
+the protocol shim, not the engine.
 """
 
 from __future__ import annotations
@@ -59,7 +62,7 @@ from australian_company_etl_spark.sources.publish import (
 # module-global name: tests patch it to corrupt a publish's or compaction's verify
 from australian_company_etl_spark.sources.publish import table_digest as _table_digest
 from australian_company_etl_spark.sources.registry import (
-    load_tables, parquet_rows, read_parquet, table_path,
+    load_tables, parquet_columns, parquet_rows, read_parquet, table_path, where_in,
 )
 
 #: tables the D-family routes read; the snapshot contains exactly these.
@@ -324,42 +327,50 @@ def append_documents_to_index(
                 ledger_path
             )
         in_ledger = read_parquet(spark, ledger_path).select("doc_id")
-        fresh = new_docs.join(in_ledger, "doc_id", "left_anti")
-        n_new = fresh.count()
-        if n_new:
-            # ledger lags postings only inside the crash window (postings are
-            # written first), so the postings-membership probe runs on the
-            # not-yet-ledgered remainder alone; a clean re-delivery never
-            # scans the index at all. At 100 TB a Bloom filter (M3) fronts
-            # this probe, same semantics.
-            in_postings = read_parquet(spark, path).select("doc_id").distinct()
-            postings_new = _doc_postings(fresh.join(in_postings, "doc_id", "left_anti"))
-            # local persist (maintenance job, not the query-scoped tracker):
-            # the batch postings feed up to two writes, and the stats ledger
-            # must describe the SAME rows as the postings append — and the
-            # postings append invalidates every cached plan that scans the
-            # index path, including this batch's anti-join.
-            postings_new = postings_new.persist()
-            try:
-                if not postings_new.isEmpty():  # token-less docs append no postings
-                    # probe-stat ledger maintained only for snapshots that
-                    # have one (older snapshots keep working; the max-df
-                    # probe just declines there). Written BEFORE the
-                    # postings: a crash in between leaves df/max_tf
-                    # inflated, which the probe's bound tolerates — the
-                    # reverse order could leave max_tf UNDER the indexed
-                    # max, breaking the exactness guard.
-                    if os.path.exists(table_path(data_dir, FULLTEXT_STATS)):
-                        _write_ledgers(data_dir, FULLTEXT_INDEX, postings_new)
-                    postings_new.repartitionByRange(2, "tok").sortWithinPartitions(
-                        "tok"
-                    ).write.mode("append").parquet(path)
-            finally:
-                postings_new.unpersist()
-            fresh.select("doc_id").write.mode("append").parquet(ledger_path)
+        # persisted: the batch's fresh rows feed the emptiness check, the
+        # postings and the ledger append, and are computed once for all
+        # three (the ledger append reads them back after the postings
+        # append, which leaves this plan cached: it does not scan the index
+        # path). How many there were is read from the ledger's footers.
+        n_before = parquet_rows(ledger_path)
+        fresh = new_docs.join(in_ledger, "doc_id", "left_anti").persist()
+        try:
+            if not fresh.isEmpty():
+                # ledger lags postings only inside the crash window (postings are
+                # written first), so the postings-membership probe runs on the
+                # not-yet-ledgered remainder alone; a clean re-delivery never
+                # scans the index at all. At 100 TB a Bloom filter (M3) fronts
+                # this probe, same semantics.
+                in_postings = read_parquet(spark, path).select("doc_id").distinct()
+                postings_new = _doc_postings(fresh.join(in_postings, "doc_id", "left_anti"))
+                # local persist (maintenance job, not the query-scoped tracker):
+                # the batch postings feed up to two writes, and the stats ledger
+                # must describe the SAME rows as the postings append — and the
+                # postings append invalidates every cached plan that scans the
+                # index path, including this batch's anti-join.
+                postings_new = postings_new.persist()
+                try:
+                    if not postings_new.isEmpty():  # token-less docs append no postings
+                        # probe-stat ledger maintained only for snapshots that
+                        # have one (older snapshots keep working; the max-df
+                        # probe just declines there). Written BEFORE the
+                        # postings: a crash in between leaves df/max_tf
+                        # inflated, which the probe's bound tolerates — the
+                        # reverse order could leave max_tf UNDER the indexed
+                        # max, breaking the exactness guard.
+                        if os.path.exists(table_path(data_dir, FULLTEXT_STATS)):
+                            _write_ledgers(data_dir, FULLTEXT_INDEX, postings_new)
+                        postings_new.repartitionByRange(2, "tok").sortWithinPartitions(
+                            "tok"
+                        ).write.mode("append").parquet(path)
+                finally:
+                    postings_new.unpersist()
+                fresh.select("doc_id").write.mode("append").parquet(ledger_path)
+        finally:
+            fresh.unpersist()
         n_docs = parquet_rows(ledger_path)
         _update_manifest(data_dir, FULLTEXT_INDEX, n_docs=n_docs, rows=parquet_rows(path))
-    return {"docs_appended": n_new, "n_docs": n_docs}
+    return {"docs_appended": n_docs - n_before, "n_docs": n_docs}
 
 
 def _run_maintenance_stream(
@@ -512,26 +523,39 @@ def build_trigram_index(
 
 
 def _ledger_frames(index_name: str, postings: DataFrame) -> dict[str, DataFrame]:
-    """{ledger name: the rows describing ``postings``} for each probe-stat
-    ledger of ``index_name`` (FULLTEXT_STATS; TRIGRAM_STATS, TRIGRAM_META)."""
+    """{ledger name: the rows describing ``postings``, as the one file a
+    write adds} for each probe-stat ledger of ``index_name``
+    (FULLTEXT_STATS; TRIGRAM_STATS, TRIGRAM_META)."""
     if index_name == FULLTEXT_INDEX:
         return {
-            FULLTEXT_STATS: postings.groupBy("tok").agg(
-                F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
+            FULLTEXT_STATS: _one_sorted_file(
+                postings.groupBy("tok").agg(
+                    F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
+                ),
+                "tok",
             )
         }
     return {
-        TRIGRAM_STATS: postings.groupBy("trgm").agg(F.count("*").alias("df_inc")),
+        TRIGRAM_STATS: _one_sorted_file(
+            postings.groupBy("trgm").agg(F.count("*").alias("df_inc")), "trgm"
+        ),
         TRIGRAM_META: postings.select("p_partkey", "n_trgm").distinct().agg(
             F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm")
-        ),
+        ).coalesce(1),
     }
+
+
+def _one_sorted_file(df: DataFrame, term_col: str) -> DataFrame:
+    """``df`` as one partition sorted by ``term_col``, so each ledger file
+    is term-sorted and its footer min/max stats confine a max-df decision's
+    driver-side read (`parquet_columns`) to the query terms' row groups."""
+    return df.coalesce(1).sortWithinPartitions(term_col)
 
 
 def _write_ledgers(data_dir: str, index_name: str, postings: DataFrame) -> None:
     """Append a postings batch's ledger rows (creating those a build dropped)."""
     for name, df in _ledger_frames(index_name, postings).items():
-        df.coalesce(1).write.mode("append").parquet(table_path(data_dir, name))
+        df.write.mode("append").parquet(table_path(data_dir, name))
 
 
 def append_parts_to_trigram_index(
@@ -555,47 +579,53 @@ def append_parts_to_trigram_index(
     with _index_lock(path):
         heal_swap(path)
         indexed = read_parquet(spark, path).select("p_partkey").distinct()
-        fresh = new_parts.join(indexed, "p_partkey", "left_anti")
-        n_new = fresh.count()
-        if n_new:
-            trg = fresh.select(
-                "p_partkey",
-                "p_name",
-                F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"),
-            ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
-            # local persist (not the query-scoped tracker — this is a
-            # maintenance job): the batch postings feed up to three writes,
-            # and the meta/stats ledgers must describe the SAME rows as the
-            # postings append
-            trg = trg.persist()
-            try:
-                # a batch can yield ZERO postings (every fresh name empty of
-                # alphanumerics): such parts never enter the index, and the
-                # ledger writes must be skipped with the postings — a
-                # zero-row batch's meta agg still emits one (0, NULL) row,
-                # and NULL min_n_trgm rows poison every later ledger read
-                if not trg.isEmpty():
-                    # probe-stat ledgers are maintained only for snapshots
-                    # that have them (older postings-only snapshots keep
-                    # working; the max-df probe just falls back there). BOTH
-                    # ledgers are written BEFORE the postings: (a) soundness
-                    # — a crash then leaves min_n_trgm ≤ the true min and
-                    # df/n_parts inflated, and neither inflated value can
-                    # break exactness (the df split only picks WHICH
-                    # trigrams probe; the guard uses min_n) — and (b)
-                    # mechanics — appending to the postings path invalidates
-                    # every cached plan that scans it, including this batch
-                    # (its anti-join reads the index), so a ledger write
-                    # issued afterwards would recompute against the
-                    # post-append index and see an empty batch.
-                    ledgers = (TRIGRAM_STATS, TRIGRAM_META)
-                    if all(os.path.exists(table_path(data_dir, n)) for n in ledgers):
-                        _write_ledgers(data_dir, TRIGRAM_INDEX, trg)
-                    trg.repartitionByRange(2, "trgm").sortWithinPartitions(
-                        "trgm"
-                    ).write.mode("append").parquet(path)
-            finally:
-                trg.unpersist()
+        # persisted: the count and the batch postings below read the
+        # anti-join once (the emptiness check first: over the cache it
+        # costs a re-delivered batch one job fewer than a count)
+        fresh = new_parts.join(indexed, "p_partkey", "left_anti").persist()
+        try:
+            n_new = 0 if fresh.isEmpty() else fresh.count()
+            if n_new:
+                trg = fresh.select(
+                    "p_partkey",
+                    "p_name",
+                    F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"),
+                ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
+                # local persist (not the query-scoped tracker — this is a
+                # maintenance job): the batch postings feed up to three writes,
+                # and the meta/stats ledgers must describe the SAME rows as the
+                # postings append
+                trg = trg.persist()
+                try:
+                    # a batch can yield ZERO postings (every fresh name empty of
+                    # alphanumerics): such parts never enter the index, and the
+                    # ledger writes must be skipped with the postings — a
+                    # zero-row batch's meta agg still emits one (0, NULL) row,
+                    # and NULL min_n_trgm rows poison every later ledger read
+                    if not trg.isEmpty():
+                        # probe-stat ledgers are maintained only for snapshots
+                        # that have them (older postings-only snapshots keep
+                        # working; the max-df probe just falls back there). BOTH
+                        # ledgers are written BEFORE the postings: (a) soundness
+                        # — a crash then leaves min_n_trgm ≤ the true min and
+                        # df/n_parts inflated, and neither inflated value can
+                        # break exactness (the df split only picks WHICH
+                        # trigrams probe; the guard uses min_n) — and (b)
+                        # mechanics — appending to the postings path invalidates
+                        # every cached plan that scans it, including this batch
+                        # (its anti-join reads the index), so a ledger write
+                        # issued afterwards would recompute against the
+                        # post-append index and see an empty batch.
+                        ledgers = (TRIGRAM_STATS, TRIGRAM_META)
+                        if all(os.path.exists(table_path(data_dir, n)) for n in ledgers):
+                            _write_ledgers(data_dir, TRIGRAM_INDEX, trg)
+                        trg.repartitionByRange(2, "trgm").sortWithinPartitions(
+                            "trgm"
+                        ).write.mode("append").parquet(path)
+                finally:
+                    trg.unpersist()
+        finally:
+            fresh.unpersist()
         _update_manifest(data_dir, TRIGRAM_INDEX, rows=parquet_rows(path))
     return {"parts_appended": n_new}
 
@@ -767,7 +797,7 @@ def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
     for name, df in _ledger_frames(index_name, idx).items():
         path = table_path(data_dir, name)
         tmp = path.rstrip("/") + ".rebuilding"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         out[name] = parquet_rows(tmp)
         drop_dir(path)
         swap_in(tmp, path)
@@ -814,12 +844,17 @@ def fulltext_rank_maxdf(
       violated either). The served topk is row-identical to the full
       plan's.
 
-    Decline cost: the ledger read (footer-pruned to the query terms) plus
-    at worst one rare-candidate aggregate before the plain probe answers —
-    bounded by ~2× the plain probe, paid only when the corpus's rare terms
-    aren't discriminative. The forced broadcast is capped driver-side by
-    Σ ledger-df(rare) ≤ MAXDF_BROADCAST_CAP, so a corpus where "rare"
-    still means millions of postings takes the plain shuffle plan instead.
+    Decline cost: the ledger is read on the driver with pyarrow
+    (`parquet_columns`, filtered to the query terms; each ledger file is
+    term-sorted, so footer min/max stats limit the read to the terms' row
+    groups) and summed there, so every decline up to and including "no
+    rare term has any ledger postings" starts no Spark job. Past that, at
+    worst the per-term df count and one rare-candidate aggregate run
+    before the plain probe answers — bounded by ~2× the plain probe, paid
+    only when the corpus's rare terms aren't discriminative. The forced
+    broadcast is capped driver-side by Σ ledger-df(rare) ≤
+    MAXDF_BROADCAST_CAP, so a corpus where "rare" still means millions of
+    postings takes the plain shuffle plan instead.
 
     Returns (rows|None, info) — info carries the decision trail for tests
     and the /search route's debugging."""
@@ -832,13 +867,15 @@ def fulltext_rank_maxdf(
         info["reason"] = "no stats ledger"
         return None, info
     try:
+        led = (
+            parquet_columns(stats_path, ["tok", "df_inc", "max_tf"], where_in("tok", terms))
+            .group_by("tok")
+            .aggregate([("df_inc", "sum"), ("max_tf", "max")])
+            .to_pydict()
+        )
         stat = {
-            r["tok"]: (int(r["df"]), int(r["mtf"]))
-            for r in read_parquet(spark, stats_path)
-            .filter(F.col("tok").isin(*terms))
-            .groupBy("tok")
-            .agg(F.sum("df_inc").alias("df"), F.max("max_tf").alias("mtf"))
-            .collect()
+            t: (int(df), int(mtf))
+            for t, df, mtf in zip(led["tok"], led["df_inc_sum"], led["max_tf_max"])
         }
     except Exception as exc:  # noqa: BLE001 — optional perf structure: a
         # torn state (crash mid-rebuild) must degrade to the plain probe
@@ -1035,8 +1072,12 @@ def trigram_rank_maxdf(
       tie-order cannot be violated either). The served topk is therefore
       row-identical to the full plan's.
 
-    Decline cost: a declined attempt spends the (tiny, footer-pruned)
-    ledger reads plus at worst one rare-candidate aggregate before the
+    Decline cost: both ledgers are read on the driver with pyarrow
+    (`parquet_columns`; the stats ledger filtered to the query trigrams,
+    which footer min/max stats of its trgm-sorted files confine to their
+    row groups) and aggregated there, so every decline up to and
+    including "no rare trigram has any ledger postings" starts no Spark
+    job. Past that, at worst one rare-candidate aggregate runs before the
     plain probe answers — bounded by ~2× the plain probe, paid only on
     corpora whose rare trigrams aren't actually discriminative. Measured
     on the sf1 TPC-H part corpus the skip declines for exactly that
@@ -1060,20 +1101,20 @@ def trigram_rank_maxdf(
         info["reason"] = "no stats ledgers"
         return None, info
     try:
-        meta = read_parquet(spark, meta_path).agg(
-            F.sum("n_parts_inc").alias("n_parts"), F.min("min_n_trgm").alias("min_n")
-        ).collect()[0]
-        if meta["n_parts"] is None or meta["min_n"] is None:
+        import pyarrow.compute as pc
+
+        meta = parquet_columns(meta_path, ["n_parts_inc", "min_n_trgm"])
+        n_parts = pc.sum(meta.column("n_parts_inc")).as_py()
+        min_n = pc.min(meta.column("min_n_trgm")).as_py()
+        if n_parts is None or min_n is None:
             raise ValueError("empty meta ledger")
-        n_parts, min_n = int(meta["n_parts"]), int(meta["min_n"])
-        dfs = {
-            r["trgm"]: int(r["df"])
-            for r in read_parquet(spark, stats_path)
-            .filter(F.col("trgm").isin(*q))
-            .groupBy("trgm")
-            .agg(F.sum("df_inc").alias("df"))
-            .collect()
-        }
+        led = (
+            parquet_columns(stats_path, ["trgm", "df_inc"], where_in("trgm", q))
+            .group_by("trgm")
+            .aggregate([("df_inc", "sum")])
+            .to_pydict()
+        )
+        dfs = {t: int(df) for t, df in zip(led["trgm"], led["df_inc_sum"])}
     except Exception as exc:  # noqa: BLE001 — the ledgers are an OPTIONAL
         # perf structure: a torn/empty state (e.g. a crash mid ledger
         # compaction overwrite) must degrade to the plain probe, never 500

@@ -112,18 +112,55 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def parquet_rows(path: str) -> int:
-    """Rows behind ``path`` with no Spark job, for a publish step counting
-    what it wrote: the footers' `num_rows` over exactly the files
-    `_files_key` lists, minus `_metadata`/`_common_metadata` summaries. A
-    listing or footer error (a file vanished) raises, never a partial sum."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(os.path.join(path, rel) if rel else path).num_rows
+def _data_files(path: str) -> list[str]:
+    """The parquet data files behind ``path``: exactly those `_files_key`
+    lists, minus `_metadata`/`_common_metadata` summaries. A listing error
+    raises."""
+    return [
+        os.path.join(path, rel) if rel else path
         for rel, _size, _mtime in _files_key(path)
         if not os.path.basename(rel).startswith(("_metadata", "_common_metadata"))
-    )
+    ]
+
+
+def parquet_rows(path: str) -> int:
+    """Rows behind ``path`` with no Spark job, for a publish step counting
+    what it wrote: the footers' `num_rows` over `_data_files`. A listing or
+    footer error (a file vanished) raises, never a partial sum."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
+
+
+def parquet_columns(path: str, columns: list[str], where=None):
+    """``columns`` of the table behind ``path`` as a pyarrow Table, read on
+    the driver with no Spark job: for small published metadata (a 25-row
+    dimension, the rows of a probe-stat ledger that match a query's terms)
+    that a request would otherwise pay a Spark job to collect. Reads
+    `_data_files`; ``where`` is an optional `pyarrow.dataset` filter
+    expression, which footer min/max statistics apply per row group, so a
+    term-sorted file is read only where the terms fall. Partition
+    (`key=value` directory) columns are not read. A directory with no data
+    files, a listing error or an unreadable file raises."""
+    import pyarrow.dataset as ds
+
+    files = _data_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet data files under {path}")
+    return ds.dataset(files, format="parquet").to_table(columns=columns, filter=where)
+
+
+def where_in(column: str, values):
+    """`parquet_columns` filter keeping rows whose ``column`` is one of
+    ``values``, spelled as an OR of equalities: pyarrow (16) applies those
+    to row-group min/max statistics, while its `isin` reads every row
+    group."""
+    import functools
+    import operator
+
+    import pyarrow.dataset as ds
+
+    return functools.reduce(operator.or_, (ds.field(column) == v for v in values))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -99,7 +99,8 @@ def test_parquet_rows_equals_a_spark_count(spark, tmp_path):
     flat directory, a `key=value`-partitioned one, after an append and
     after a `compact_index` swap. `_SUCCESS`, `.crc` and a
     `_common_metadata` summary (here a copy of a data file, so counting it
-    would show) are not counted."""
+    would show) are not counted. `registry.parquet_columns` reads the same
+    files, with and without a filter, also with no Spark job."""
     import glob
     import shutil
 
@@ -119,6 +120,12 @@ def test_parquet_rows_equals_a_spark_count(spark, tmp_path):
     def same_count(path: str, rows: int) -> None:
         assert spark_jobs(spark, lambda: registry.parquet_rows(path)) == []
         assert registry.parquet_rows(path) == read_parquet(spark, path).count() == rows
+        # `parquet_columns` reads the same files, also with no Spark job
+        assert spark_jobs(spark, lambda: registry.parquet_columns(path, ["id"])) == []
+        ids = sorted(registry.parquet_columns(path, ["id"]).column("id").to_pylist())
+        assert ids == sorted(r.id for r in read_parquet(spark, path).select("id").collect())
+        some = registry.parquet_columns(path, ["id"], registry.where_in("id", [3, 5]))
+        assert some.num_rows == ids.count(3) + ids.count(5) > 0
 
     same_count(flat, 100)
     same_count(parted, 50)

@@ -289,8 +289,9 @@ def test_warm_publish_and_append_job_counts(spark, tmp_path):
     """Publish steps count what they wrote from parquet footers, not by
     re-reading it, and the snapshot takes each table's expected digest
     during the write. Warm job counts: at most 40 for `snapshot_tables`,
-    20 for a fresh 100-document append and 4 for its re-delivery, which
-    changes nothing."""
+    16 for a fresh 100-document append (which evaluates the batch's
+    anti-join against the doc ledger once) and 4 for its re-delivery,
+    which changes nothing."""
     import pathlib
 
     from australian_company_etl_spark.serving import http_api as api
@@ -308,7 +309,7 @@ def test_warm_publish_and_append_job_counts(spark, tmp_path):
     api.append_documents_to_index(spark, batch(10**7), snap)
     fresh = batch(2 * 10**7)
     names = spark_jobs(spark, lambda: api.append_documents_to_index(spark, fresh, snap))
-    assert len(names) <= 20, names
+    assert len(names) <= 16, names
     manifest = pathlib.Path(snap, "_SNAPSHOT.json")
     before = manifest.read_text()
     names = spark_jobs(spark, lambda: api.append_documents_to_index(spark, fresh, snap))
@@ -1449,6 +1450,12 @@ def test_trigram_ledger_compaction_folds_and_preserves_probe(spark, tmp_path):
     after = trigram_rank_maxdf(spark, d, TRGM_QUERY, TRGM_TOPK)
     assert after[0] == before[0]  # identical decision and rows
 
+    # truncated ledger file: probe declines with a reason, never raises
+    (ledger_file,) = glob.glob(os.path.join(stats_path, "*.parquet"))
+    os.truncate(ledger_file, os.path.getsize(ledger_file) // 2)
+    rows, info = trigram_rank_maxdf(spark, d, TRGM_QUERY, TRGM_TOPK)
+    assert rows is None and "unreadable stats ledgers" in info["reason"]
+
     # torn ledger: probe declines with a reason, never raises
     shutil.rmtree(stats_path)
     os.makedirs(stats_path)
@@ -1615,6 +1622,123 @@ def test_fulltext_maxdf_declines_over_broadcast_cap(spark, tmp_path, monkeypatch
     assert rows is None and "broadcast cap" in info["reason"]
 
 
+def test_maxdf_declines_before_the_candidate_probe_start_no_spark_job(spark, tmp_path):
+    """Every max-df decision that declines before its candidate probe is
+    taken from the probe-stat ledgers read on the driver (pyarrow), so it
+    starts no Spark job: on the crafted hot corpora, "no hot terms",
+    "every query term is hot" and "no rare term has any ledger postings"
+    for full-text, "every query trigram is hot" and "no rare trigram has
+    any ledger postings" for trigrams."""
+    from australian_company_etl_spark.serving import http_api as api
+    from tests.conftest import spark_jobs
+
+    _corpus, ft = _crafted_ft_corpus(spark, tmp_path)
+    _corpus, trgm = _crafted_trgm_corpus(spark, tmp_path)
+    cases = [
+        (lambda: api.fulltext_rank_maxdf(spark, ft, ["uid17", "uid03"], 2, 60), "no hot terms"),
+        (
+            lambda: api.fulltext_rank_maxdf(spark, ft, ["golden", "harvest"], 5, 60),
+            "every query term is hot",
+        ),
+        (
+            lambda: api.fulltext_rank_maxdf(spark, ft, ["golden", "zzznotaword"], 1, 60),
+            "no rare term has any ledger postings",
+        ),
+        (
+            lambda: api.trigram_rank_maxdf(spark, trgm, "golden harvest", 5),
+            "every query trigram is hot",
+        ),
+        (
+            lambda: api.trigram_rank_maxdf(spark, trgm, "golden 9999", 1),
+            "no rare trigram has any ledger postings",
+        ),
+    ]
+    for decide, reason in cases:
+        out = []
+        names = spark_jobs(spark, lambda: out.append(decide()))
+        rows, info = out[0]
+        assert rows is None and info["reason"] == reason, info
+        assert names == [], (reason, names)
+
+
+def test_nation_fold_equals_the_join_on_crafted_snapshots(spark, tmp_path):
+    """D1 and D3 fold `nation` into their plans as literals instead of
+    joining it. On nation tables built to stress the join — a key held by
+    two rows (same and different names), a NULL key, a nation with no
+    customers, a NULL name, a name with a quote and a backslash, and an
+    empty table — with customers whose
+    c_nationkey is NULL or has no nation row, both must equal
+    LOOKUP_SQL / BY_STATE_SQL in DuckDB row for row, with the join plan's
+    output schema."""
+    import duckdb
+
+    from pyspark.sql import functions as F
+
+    from australian_company_etl_spark.sources.registry import load_tables, table_path
+
+    customer = spark.createDataFrame(
+        [
+            (42, "c42", 3, 1.25, "A"),
+            (43, "c43", 5, 2.5, "B"),
+            (44, "c44", None, 3.0, "C"),
+            (45, "c45", 11, 4.0, "D"),
+            (46, "c46", 9, 5.0, "E"),
+            (47, "c47", 3, 6.0, "F"),
+            (48, "c48", 12, 7.0, "G"),
+        ],
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string",
+    )
+    nations = {
+        "crafted": [
+            (3, "NATION_3"), (3, "NATION_3"), (5, "NATION_5"), (5, "NATION_X"),
+            (None, "NATION_3"), (7, "NATION_7"), (9, None), (12, "O'Brien \\ Land"),
+        ],
+        "empty": [],
+    }
+    n_rows = {}
+    for name, rows in nations.items():
+        d = str(tmp_path / name)
+        customer.write.parquet(table_path(d, "customer"))
+        spark.createDataFrame(rows, "n_nationkey int, n_name string").write.parquet(
+            table_path(d, "nation")
+        )
+        con = duckdb.connect()
+        for t in ("customer", "nation"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(d, t)}/*.parquet')"
+            )
+        t = load_tables(spark, d, ["customer", "nation"])
+        join = t["customer"].join(t["nation"], F.col("c_nationkey") == F.col("n_nationkey"))
+
+        def check(df, sql, ref):
+            assert df.schema == ref.schema
+            res = con.execute(sql)
+            cols = [c[0] for c in res.description]
+            want = canonical_rows(cols, res.fetchall())
+            assert canonical_rows(cols, [tuple(r[c] for c in cols) for r in df.collect()]) == want
+            n_rows[name] = n_rows.get(name, 0) + len(want)
+
+        d1_ref = join.select(
+            "c_custkey", "c_name", "c_mktsegment", F.round("c_acctbal", 2).alias("c_acctbal"),
+            "n_name",
+        )
+        for key in (42, 43, 44, 45, 46, 47, 48, 99):
+            check(
+                api_plans.api_lookup_by_key(spark, d, key=key),
+                api_plans.LOOKUP_SQL.replace(f"= {api_plans.LOOKUP_KEY}", f"= {key}"),
+                d1_ref,
+            )
+        for state in ("NATION_3", "NATION_5", "NATION_X", "NATION_7", "NATION_11"):
+            check(
+                api_plans.api_by_state(spark, d, state=state),
+                api_plans.BY_STATE_SQL.replace(f"'{api_plans.STATE_NAME}'", f"'{state}'"),
+                join.select("c_custkey", "c_name", "n_name"),
+            )
+        con.close()
+    # D1: 42 ×2, 43 ×2, 46, 47 ×2, 48; D3: NATION_3 4, NATION_5 1, NATION_X 1
+    assert n_rows == {"crafted": 14, "empty": 0}
+
+
 def test_fulltext_maxdf_survives_appends_and_compaction_rebuild(spark, tmp_path):
     """Append-only stats maintenance must keep ledger df/max_tf at-or-above
     the postings ground truth (exactly equal on clean appends; re-delivered
@@ -1686,6 +1810,12 @@ def test_fulltext_maxdf_survives_appends_and_compaction_rebuild(spark, tmp_path)
     assert rebuilt == truth
     after, info2 = api.fulltext_rank_maxdf(spark, d, ["golden", "uid17"], 1, n_docs)
     assert info2["used"] and after == before
+
+    # truncated ledger file: probe declines with a reason, never raises
+    (ledger_file,) = glob.glob(os.path.join(stats_path, "*.parquet"))
+    os.truncate(ledger_file, os.path.getsize(ledger_file) // 2)
+    rows, info4 = api.fulltext_rank_maxdf(spark, d, ["golden", "uid17"], 1, n_docs)
+    assert rows is None and "unreadable stats ledger" in info4["reason"]
 
     # torn ledger: probe declines with a reason, never raises
     shutil.rmtree(stats_path)
@@ -1953,12 +2083,13 @@ def test_rebuild_crash_leaves_stat_ledgers_absent_not_stale(spark, tmp_path, mon
 #: (an uncached read adds one `parquet at ...` inference job per table or
 #: index the route touches)
 _WARM_ROUTE_JOBS = [
-    (f"/companies/{api_plans.LOOKUP_KEY}", 2, 2),  # nation broadcast + collect
-    (f"/companies/by_state?state={api_plans.STATE_NAME}", 2, 2),
+    (f"/companies/{api_plans.LOOKUP_KEY}", 1, 1),  # nation folded in: the collect
+    (f"/companies/by_state?state={api_plans.STATE_NAME}", 1, 1),
     (f"/companies/search?q={api_plans.SEARCH_PATTERN}", 1, 1),
     (f"/companies?after={api_plans.PAGE_AFTER}&limit={api_plans.PAGE_SIZE}", 1, 1),
-    ("/search?q=" + "+".join(api_plans.FT_QUERY_TERMS), 1, 6),
-    (f"/fuzzy?q={api_plans.TRGM_QUERY.replace(' ', '+')}", 1, 6),
+    # a max-df decline before the candidate probe reads its ledgers with no job
+    ("/search?q=" + "+".join(api_plans.FT_QUERY_TERMS), 1, 4),
+    (f"/fuzzy?q={api_plans.TRGM_QUERY.replace(' ', '+')}", 1, 2),
 ]
 
 
