@@ -842,10 +842,13 @@ def _knn_cogroup_score(_key, ldf, rdf):
     fold's — scores are bit-identical, verified output-identical at
     sf0.1 and pinned by tests/test_knn_arrow_kernel.py.
 
-    Null vectors (zero-norm policy) score None — like the fold's NULL,
-    never NaN (NaN would sort ABOVE every real score in the DESC rank).
-    The lhs is chunked so the (m, n) score block stays ≤ ~32 MB however
-    skewed a bucket is."""
+    Null vectors (zero-norm policy) score None, like the fold's NULL. A
+    NaN dot (an embedding with a NaN or infinite component normalizes to
+    a vector holding NaN) stays NaN, like the fold's, and Spark ranks it
+    ABOVE every real score. Both reach the JVM through a masked
+    `FloatingArray`: a plain float64 column would turn every NaN into
+    NULL on its way to Arrow. The lhs is chunked so the (m, n) score
+    block stays ≤ ~32 MB however skewed a bucket is."""
     import numpy as _np
     import pandas as _pd
 
@@ -877,7 +880,7 @@ def _knn_cogroup_score(_key, ldf, rdf):
             S = seq_dot_cross(_np.stack(la[lo:hi]), B)
         else:
             ok_chunk = lok[lo:hi]
-            S = _np.full((hi - lo, n), _np.nan)
+            S = _np.zeros((hi - lo, n))  # NULL pairs: masked on the way out
             if B is not None and ok_chunk.any():
                 A = _np.stack(la[lo:hi][ok_chunk])
                 S[_np.ix_(ok_chunk, rok)] = seq_dot_cross(A, B)
@@ -893,22 +896,22 @@ def _knn_cogroup_score(_key, ldf, rdf):
             # pruning below the margin is lossless; it cuts the Arrow→JVM
             # pair stream and the window's local sorts ~n/K-fold. Rows
             # with fewer than K real candidates keep everything (kth is
-            # −inf). The null-vector (not all_ok) path never prunes: NULL
-            # scores can reach the global top-K only when a src has
-            # < K real candidates ACROSS buckets, which one bucket cannot
-            # decide — and such corpora are tiny by construction.
-            Sneg = _np.where(keep, S, -_np.inf)
-            kth = _np.partition(Sneg, n - KNN_GRAPH_K, axis=1)[:, n - KNN_GRAPH_K]
-            keep = keep & (S >= (kth - 2e-6)[:, None])
+            # −inf). NaN ranks as +inf here, as Spark orders it above
+            # every number, so a NaN kth keeps exactly the NaN candidates
+            # and a NaN candidate is never pruned. The null-vector (not
+            # all_ok) path never prunes: NULL scores can reach the global
+            # top-K only when a src has < K real candidates ACROSS
+            # buckets, which one bucket cannot decide — and such corpora
+            # are tiny by construction.
+            R = _np.where(_np.isnan(S), _np.inf, S)
+            kth = _np.partition(_np.where(keep, R, -_np.inf), n - KNN_GRAPH_K, axis=1)[
+                :, n - KNN_GRAPH_K
+            ]
+            keep = keep & (R >= (kth - 2e-6)[:, None])
         si, ni = _np.nonzero(keep)
-        dots = S[si, ni]
-        out = _pd.DataFrame({"src_id": s_chunk[si], "nbr_id": nbr[ni]})
-        if all_ok:
-            out["dot"] = dots
-        else:
-            # NULL-vector pairs must reach the JVM as SQL NULL, not NaN
-            # (NaN sorts ABOVE every number in the DESC rank ordering)
-            out["dot"] = _pd.Series(dots).astype(object).where(~_pd.isna(dots), None)
+        null = ~(lok[lo:hi][si] & rok[ni])
+        dots = _pd.arrays.FloatingArray(S[si, ni], null)
+        out = _pd.DataFrame({"src_id": s_chunk[si], "nbr_id": nbr[ni], "dot": dots})
         if len(out):
             outs.append(out)
     if not outs:

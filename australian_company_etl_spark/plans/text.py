@@ -847,63 +847,6 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: doc_ids per posting shard in the sharded H12 variant — sized so one
-#: segment row stays ~O(shard) doc_ids however hot the token; at web scale
-#: this is the (tok, bucket) segment-file bound the monolithic build's
-#: docstring promises past ~1e6 docs/token. Small here so gate corpora
-#: actually produce multi-shard tokens for the equality proofs.
-INVERTED_SHARD_DOCS = 100
-
-
-def text_inverted_index_sharded(
-    spark: SparkSession, sf_dir: str, shard_docs: int = INVERTED_SHARD_DOCS
-) -> DataFrame:
-    """H12, the SHARDED build (VERDICT r11 task 7 — registry-adjacent
-    library op; the registry key stays the monolithic parity twin): the
-    posting list of each token is split into (tok, shard_id) SEGMENT rows,
-    shard_id = doc_id div shard_docs, each segment carrying its own sorted
-    comma-joined doc_ids and segment df. A stop-word token's single
-    unbounded posting row becomes ⌈N/shard_docs⌉ bounded rows — the
-    structure that stays writable (one row group per segment) and
-    APPEND-MAINTAINABLE at any df: a new ingest batch of fresh doc_ids
-    touches only its own shards' segments, never rewriting an existing
-    row. Exactness: segments partition each token's postings (div is
-    total on doc_id), so global df = Σ segment df and the monolithic
-    posting string is the shard_id-ordered concatenation — both proven
-    row-identical to text_inverted_index in tests on a crafted hot-token
-    corpus (tests/test_sharded_index.py)."""
-    docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    toks = (
-        docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(tokens_all_spark(F.col("text")))).alias("tok"),
-        )
-        .withColumn("shard_id", (F.col("doc_id") / shard_docs).cast("bigint"))
-    )
-    return toks.groupBy("tok", "shard_id").agg(
-        F.count("*").alias("df_docs_shard"),
-        F.array_join(F.sort_array(F.collect_list("doc_id")), ",").alias("postings"),
-    )
-
-
-def inverted_index_from_shards(sharded: DataFrame) -> DataFrame:
-    """Reassemble the monolithic H12 rows from sharded segments — the
-    equality proof's subject: df by summing segment dfs, postings by
-    concatenating segments in shard_id order (within a shard the segment
-    is already sorted, and shard_id order IS doc_id order because the
-    shard function is monotone). Used by tests; a consumer at scale never
-    calls this — bounded segments are the point."""
-    w_parts = F.array_sort(
-        F.collect_list(F.struct(F.col("shard_id"), F.col("postings")))
-    )
-    return sharded.groupBy("tok").agg(
-        F.sum("df_docs_shard").cast("long").alias("df_docs"),
-        F.array_join(
-            F.transform(w_parts, lambda s: s["postings"]), ","
-        ).alias("postings"),
-    )
-
-
 def inverted_index_stats(spark: SparkSession, sf_dir: str) -> dict:
     """H12 scale instrumentation (VERDICT r09 task 1): postings
     distribution — vocabulary size, the hottest token's document frequency

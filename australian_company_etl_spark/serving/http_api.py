@@ -43,6 +43,8 @@ import os
 import re
 import threading
 import time
+from collections.abc import Callable
+from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -81,6 +83,16 @@ FULLTEXT_INDEX = "fulltext_index"
 #: n_docs (idf's denominator) is always exactly the ledger count. At 100 TB
 #: this is the processed-doc ledger a Bloom filter (M3) fronts.
 FULLTEXT_DOCS = "fulltext_docs"
+#: append-only (tok, df_inc, max_tf) probe-stat ledger beside the full-text
+#: index, written BEFORE each postings append (a crash inflates df/max_tf,
+#: and the max-df probe's exactness bound only uses max_tf as an UPPER
+#: bound on any indexed tf, so inflation can only cause declines, never
+#: wrong rows). Unlike the doc ledger this is NO membership authority:
+#: every value in it is derivable from the postings, so compaction
+#: REBUILDS it wholesale from the compacted index instead of folding rows —
+#: which also heals every torn/absent state for free. Optional perf
+#: structure: absent or unreadable ⇒ the probe declines to the plain plan.
+FULLTEXT_STATS = "fulltext_stats"
 #: sharded posting segments beside the flat index (r12): one row per
 #: (tok, shard) carrying doc_id-sorted arrays — the bounded-row form the
 #: H12 docstring promises past ~1e6 docs/token, served under /search?shard=1
@@ -88,6 +100,33 @@ FULLTEXT_SHARDED = "fulltext_sharded"
 #: doc_ids per shard segment; small locally so gate corpora produce real
 #: multi-shard tokens — at scale pick ~1e5-1e6 (segment row ≈ one row group)
 FT_SHARD_DOCS = 100
+
+TRIGRAM_INDEX = "trigram_index"
+#: part ledger beside the trigram index, FULLTEXT_DOCS's twin: one row per
+#: indexed p_partkey, so a part whose name yields no trigrams is remembered
+#: and its re-delivery appends nothing. Builds publish without it (it is
+#: dropped with the postings they replace); the first append backfills it
+#: from the postings' distinct p_partkeys.
+TRIGRAM_PARTS = "trigram_parts"
+#: optional probe-cost statistics beside the trigram index, both APPEND-ONLY
+#: ledgers (same dataflow as the postings): `trigram_stats` holds (trgm,
+#: df_inc) rows — a trigram's document frequency is the SUM of its rows —
+#: and `trigram_meta` holds (n_parts_inc, min_n_trgm) rows — corpus size is
+#: the sum, the corpus-wide minimum distinct-trigram count is the min.
+#: They exist solely for the max-df probe skip (`trigram_rank_maxdf`);
+#: when absent or stale the probe falls back to the full plan, so they are
+#: never a correctness dependency. Append ordering makes the guard SOUND
+#: under crashes: both ledger rows are written BEFORE the postings, so a
+#: crash in the window leaves min_n_trgm ≤ the true min (the guard's only
+#: soundness input) and df/n_parts inflated — inflation only shifts the
+#: hot/rare split and the fallback rate, never the served rows.
+TRIGRAM_STATS = "trigram_stats"
+TRIGRAM_META = "trigram_meta"
+#: max-df probe declines when the rare-candidate upper bound (Σ df of the
+#: rare query trigrams, from the stats ledger) exceeds this — the skip's
+#: semi-join force-broadcasts the candidate keys, and ~500k bigint keys is
+#: a conservative executor-memory-safe broadcast at any cluster size.
+MAXDF_BROADCAST_CAP = 500_000
 
 
 @contextlib.contextmanager
@@ -156,10 +195,106 @@ def _update_manifest(data_dir: str, index_name: str, **values) -> None:
 
 
 def _doc_postings(docs: DataFrame) -> DataFrame:
+    """(tok, doc_id, tf) posting rows of (doc_id, text) documents."""
     from australian_company_etl_spark.functions.textfns import tokens_all_spark
 
     toks = docs.select("doc_id", F.explode(tokens_all_spark(F.col("text"))).alias("tok"))
     return toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
+
+
+def _part_postings(parts: DataFrame) -> DataFrame:
+    """(p_partkey, p_name, trgm, n_trgm) posting rows of (p_partkey, p_name)
+    parts: one per distinct pg_trgm trigram of the name, carrying the name
+    and the part's distinct-trigram count — everything D6's Jaccard
+    ranking needs, and all of it local to its p_partkey."""
+    return parts.select(
+        "p_partkey",
+        "p_name",
+        F.explode(F.expr(api_plans._TRGM_EXPR.format(c="p_name"))).alias("trgm"),
+    ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
+
+
+def _one_sorted_file(df: DataFrame, term_col: str) -> DataFrame:
+    """``df`` as one partition sorted by ``term_col``, so each ledger file
+    is term-sorted and its footer min/max stats confine a max-df decision's
+    driver-side read (`parquet_columns`) to the query terms' row groups."""
+    return df.coalesce(1).sortWithinPartitions(term_col)
+
+
+@dataclass(frozen=True)
+class _Index:
+    """One append-maintained serving index, described once. The build,
+    the appender, compaction and the startup heal read these fields and
+    never ask which index they serve."""
+
+    name: str  # the postings directory and its manifest entry
+    id_col: str  # source rows are first-wins per id
+    term_col: str  # the postings' range-partition and sort key
+    postings: Callable[[DataFrame], DataFrame]  # source rows → posting rows
+    members: str  # membership ledger: one row per indexed id
+    #: probe-stat ledger name → its rows describing a set of postings, as
+    #: the one file an append adds
+    stats: dict[str, Callable[[DataFrame], DataFrame]]
+    count_key: str | None  # manifest key holding the membership count
+
+
+FULLTEXT = _Index(
+    name=FULLTEXT_INDEX,
+    id_col="doc_id",
+    term_col="tok",
+    postings=_doc_postings,
+    members=FULLTEXT_DOCS,
+    stats={
+        FULLTEXT_STATS: lambda p: _one_sorted_file(
+            p.groupBy("tok").agg(F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")),
+            "tok",
+        ),
+    },
+    count_key="n_docs",
+)
+TRIGRAM = _Index(
+    name=TRIGRAM_INDEX,
+    id_col="p_partkey",
+    term_col="trgm",
+    postings=_part_postings,
+    members=TRIGRAM_PARTS,
+    stats={
+        TRIGRAM_STATS: lambda p: _one_sorted_file(
+            p.groupBy("trgm").agg(F.count("*").alias("df_inc")), "trgm"
+        ),
+        TRIGRAM_META: lambda p: p.select("p_partkey", "n_trgm")
+        .distinct()
+        .agg(F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm"))
+        .coalesce(1),
+    },
+    count_key=None,  # the manifest entry holds the posting rows only
+)
+_INDEXES = {ix.name: ix for ix in (FULLTEXT, TRIGRAM)}
+
+
+def _write_ledgers(data_dir: str, ix: _Index, postings: DataFrame) -> None:
+    """Append a postings batch's probe-stat ledger rows (creating those a
+    build dropped)."""
+    for name, rows in ix.stats.items():
+        rows(postings).write.mode("append").parquet(table_path(data_dir, name))
+
+
+def _write_postings(ix: _Index, rows: DataFrame, out_dir: str, n_files: int) -> str:
+    """The build step both indexes share: drop the derived ledgers, then
+    overwrite the postings of ``rows`` as ``n_files`` range-partitioned,
+    term-sorted files. Dropping first means a crash anywhere leaves no
+    stale ledger describing the wrong corpus: an absent probe-stat ledger
+    makes the probe decline, and an absent membership ledger is
+    backfilled by the next append from the postings — strictly better
+    than a stale ledger asserting membership for ids the new postings no
+    longer contain. Returns the postings path."""
+    path = table_path(out_dir, ix.name)
+    for name in (*ix.stats, ix.members):
+        drop_dir(table_path(out_dir, name))
+    ix.postings(rows).repartitionByRange(n_files, ix.term_col).sortWithinPartitions(
+        ix.term_col
+    ).write.mode("overwrite").parquet(path)
+    return path
 
 
 def build_fulltext_index(
@@ -189,26 +324,29 @@ def build_fulltext_index(
     ``n_files`` sizes the sorted layout: the local default (8) suits the
     test corpora; at scale pick postings_bytes / ~128 MB so each file is
     one well-sized contiguous key range (the same sizing rule as
-    compact_dataset's target_bytes).
+    compact_dataset's target_bytes). The doc ledger is written from the
+    corpus itself, so token-less documents are members from the start.
     Returns {"rows": postings, "n_docs": corpus size}."""
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
-    tf = _doc_postings(docs)
-    path = table_path(out_dir, FULLTEXT_INDEX)
-    # stats first ABSENT, then postings, then stats rewritten: a crash
-    # anywhere leaves no stale ledger describing the wrong corpus. The doc
-    # ledger is dropped too — absent reads as a pre-ledger snapshot and the
-    # append path backfills it once from the index's distinct doc_ids,
-    # which is strictly better than a stale ledger asserting membership
-    # for documents the new postings no longer contain.
-    for name in (FULLTEXT_STATS, FULLTEXT_DOCS):
-        drop_dir(table_path(out_dir, name))
-    tf.repartitionByRange(n_files, "tok").sortWithinPartitions("tok").write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _write_postings(FULLTEXT, docs, out_dir, n_files)
     ledger_path = table_path(out_dir, FULLTEXT_DOCS)
     docs.select("doc_id").distinct().write.mode("overwrite").parquet(ledger_path)
-    _write_ledgers(out_dir, FULLTEXT_INDEX, read_parquet(spark, path))
+    _write_ledgers(out_dir, FULLTEXT, read_parquet(spark, path))
     return {"rows": parquet_rows(path), "n_docs": parquet_rows(ledger_path)}
+
+
+def build_trigram_index(
+    spark: SparkSession, sf_dir: str, out_dir: str, n_files: int = 8
+) -> int:
+    """Publish the pg_trgm-analog inverted index: one row per
+    (trgm, p_partkey) with the part's name and distinct-trigram count
+    (`_part_postings`), in the same trgm-sorted layout and for the same
+    row-group term pruning as the full-text index. Returns the
+    posting-row count."""
+    part = load_tables(spark, sf_dir, ["part"])["part"]
+    path = _write_postings(TRIGRAM, part, out_dir, n_files)
+    _write_ledgers(out_dir, TRIGRAM, read_parquet(spark, path))
+    return parquet_rows(path)
 
 
 def _shard_segments(tf: DataFrame, shard_docs: int) -> DataFrame:
@@ -280,97 +418,137 @@ def append_documents_to_sharded(
     return {"segments_appended": parquet_rows(path)}
 
 
-def append_documents_to_index(
-    spark: SparkSession, new_docs: DataFrame, data_dir: str
-) -> dict:
-    """Incremental index maintenance: append the NEW documents' postings
-    and bump the manifest's n_docs — existing rows are never rewritten.
-    First-wins at BOTH granularities (the J8 upsert discipline): duplicate
-    doc_ids WITHIN the batch collapse to one row before anything else, and
-    doc_ids already in the ledger are anti-joined away — so a retried or
-    self-duplicating batch cannot inflate df, tf, or n_docs. Membership is
-    decided against the `fulltext_docs` LEDGER, not the posting rows: a
-    token-less document leaves no postings but IS recorded in the ledger,
-    so its re-delivery is a no-op and n_docs (idf's denominator) stays the
-    exact ledger count.
+def _append(
+    spark: SparkSession, ix: _Index, batch: DataFrame, data_dir: str
+) -> tuple[int, int]:
+    """The one incremental appender of both serving indexes: append the
+    NEW source rows' postings — existing rows are never rewritten — and
+    record them in the membership ledger and the manifest.
 
-    CRASH SAFETY: the postings append and the ledger append are two
-    parquet writes with no shared transaction, so each write's freshness
-    is decided against its OWN table — postings against the posting rows,
-    ledger against the ledger. A crash between the two (the exact window
-    an at-least-once foreachBatch replay re-enters) then heals instead of
-    corrupting: the replay finds the postings already present (skips
-    them, no doubled tf) and appends only the missing ledger rows.
+    First-wins at BOTH granularities (the J8 upsert discipline): duplicate
+    ids WITHIN the batch collapse to one row before anything else, and ids
+    already in the membership ledger are anti-joined away — so a retried
+    or self-duplicating batch cannot inflate a posting, a df or a count.
+    Membership is decided against the LEDGER, not the posting rows: a
+    source row with no terms leaves no postings but IS recorded, so its
+    re-delivery is a no-op. A snapshot published without the ledger
+    backfills it ONCE from the postings' distinct ids — exactly the
+    postings-anti-join membership source, so the migration changes no
+    append decision — written beside it and swapped in (`swap_in`), so a
+    crash leaves the ledger absent, never partial.
+
+    CRASH SAFETY: the probe-stat ledgers, the postings and the membership
+    ledger are separate parquet writes with no shared transaction, so
+    each write's freshness is decided against its OWN table — postings
+    against the posting rows, ledger against the ledger. A crash between
+    them (the exact window an at-least-once foreachBatch replay
+    re-enters) then heals instead of corrupting: the replay finds the
+    postings already present (skips them, no doubled tf or |∩|) and
+    appends only the missing ledger rows. The probe-stat rows go BEFORE
+    the postings: a crash in between leaves df/max_tf inflated and
+    min_n_trgm at most the true minimum, which the max-df guards tolerate
+    (the reverse order could leave max_tf UNDER the indexed max) and the
+    next compaction rebuilds exactly.
 
     Holds the index lock for the whole read-membership → write → manifest
-    window: without it a concurrent `compact_index` swap could replace the
+    window: without it a concurrent `compact_index` swap could replace a
     directory between this function's listing and its append, stranding
     the appended files in the swapped-out copy (`_index_lock`).
-    Returns what was appended (ledger granularity)."""
-    path = table_path(data_dir, FULLTEXT_INDEX)
-    ledger_path = table_path(data_dir, FULLTEXT_DOCS)
-    new_docs = new_docs.dropDuplicates(["doc_id"])
+    Returns (ids appended, ids in the membership ledger)."""
+    path = table_path(data_dir, ix.name)
+    ledger_path = table_path(data_dir, ix.members)
+    batch = batch.dropDuplicates([ix.id_col])
     with _index_lock(path):
         heal_swap(path)
-        # the doc ledger swaps during fulltext compaction too — heal it
+        # the membership ledger swaps during compaction too — heal it
         # BEFORE the exists-check below, or a mid-swap crash would look
-        # like a pre-ledger snapshot and the postings backfill would lose
-        # every token-less doc's membership
+        # like a ledger-less snapshot and the postings backfill would lose
+        # every term-less member
         heal_swap(ledger_path)
         if not os.path.exists(ledger_path):
-            # pre-ledger snapshot (postings only, published before the
-            # ledger existed): backfill it ONCE from the index's distinct
-            # doc_ids — exactly the old postings-anti-join membership
-            # source, so migration changes no append decision. (Token-less
-            # docs were unrepresentable in that layout; nothing to recover.)
-            read_parquet(spark, path).select("doc_id").distinct().write.parquet(
-                ledger_path
-            )
-        in_ledger = read_parquet(spark, ledger_path).select("doc_id")
+            # under the index lock, like the ledger compaction that shares
+            # this sibling path: a leftover from a crashed backfill is
+            # overwritten
+            tmp = ledger_path.rstrip("/") + REWRITE
+            read_parquet(spark, path).select(ix.id_col).distinct().write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            swap_in(tmp, ledger_path)
+        in_ledger = read_parquet(spark, ledger_path).select(ix.id_col)
         # persisted: the batch's fresh rows feed the emptiness check, the
         # postings and the ledger append, and are computed once for all
         # three (the ledger append reads them back after the postings
         # append, which leaves this plan cached: it does not scan the index
         # path). How many there were is read from the ledger's footers.
         n_before = parquet_rows(ledger_path)
-        fresh = new_docs.join(in_ledger, "doc_id", "left_anti").persist()
+        fresh = batch.join(in_ledger, ix.id_col, "left_anti").persist()
         try:
             if not fresh.isEmpty():
-                # ledger lags postings only inside the crash window (postings are
-                # written first), so the postings-membership probe runs on the
-                # not-yet-ledgered remainder alone; a clean re-delivery never
-                # scans the index at all. At 100 TB a Bloom filter (M3) fronts
-                # this probe, same semantics.
-                in_postings = read_parquet(spark, path).select("doc_id").distinct()
-                postings_new = _doc_postings(fresh.join(in_postings, "doc_id", "left_anti"))
-                # local persist (maintenance job, not the query-scoped tracker):
-                # the batch postings feed up to two writes, and the stats ledger
-                # must describe the SAME rows as the postings append — and the
-                # postings append invalidates every cached plan that scans the
-                # index path, including this batch's anti-join.
-                postings_new = postings_new.persist()
+                # the ledger lags the postings only inside the crash window
+                # (postings are written first), so the postings-membership
+                # probe runs on the not-yet-ledgered remainder alone; a clean
+                # re-delivery never scans the index at all. At 100 TB a
+                # Bloom filter (M3) fronts this probe, same semantics.
+                in_postings = read_parquet(spark, path).select(ix.id_col).distinct()
+                postings = ix.postings(fresh.join(in_postings, ix.id_col, "left_anti"))
+                # local persist (maintenance job, not the query-scoped
+                # tracker): the batch postings feed up to three writes, and
+                # the probe-stat ledgers must describe the SAME rows as the
+                # postings append — which invalidates every cached plan that
+                # scans the index path, including this one, so the ledger
+                # rows must be written before it
+                postings = postings.persist()
                 try:
-                    if not postings_new.isEmpty():  # token-less docs append no postings
-                        # probe-stat ledger maintained only for snapshots that
-                        # have one (older snapshots keep working; the max-df
-                        # probe just declines there). Written BEFORE the
-                        # postings: a crash in between leaves df/max_tf
-                        # inflated, which the probe's bound tolerates — the
-                        # reverse order could leave max_tf UNDER the indexed
-                        # max, breaking the exactness guard.
-                        if os.path.exists(table_path(data_dir, FULLTEXT_STATS)):
-                            _write_ledgers(data_dir, FULLTEXT_INDEX, postings_new)
-                        postings_new.repartitionByRange(2, "tok").sortWithinPartitions(
-                            "tok"
+                    # a batch can yield ZERO postings (term-less rows only):
+                    # the stat writes are skipped with the postings — a
+                    # zero-row meta aggregate still emits one (0, NULL) row,
+                    # and NULL min_n_trgm rows poison every later ledger read
+                    if not postings.isEmpty():
+                        # probe-stat ledgers are maintained only for snapshots
+                        # that have them (older snapshots keep working; the
+                        # max-df probe just declines there)
+                        if all(os.path.exists(table_path(data_dir, n)) for n in ix.stats):
+                            _write_ledgers(data_dir, ix, postings)
+                        postings.repartitionByRange(2, ix.term_col).sortWithinPartitions(
+                            ix.term_col
                         ).write.mode("append").parquet(path)
                 finally:
-                    postings_new.unpersist()
-                fresh.select("doc_id").write.mode("append").parquet(ledger_path)
+                    postings.unpersist()
+                fresh.select(ix.id_col).write.mode("append").parquet(ledger_path)
         finally:
             fresh.unpersist()
-        n_docs = parquet_rows(ledger_path)
-        _update_manifest(data_dir, FULLTEXT_INDEX, n_docs=n_docs, rows=parquet_rows(path))
-    return {"docs_appended": n_docs - n_before, "n_docs": n_docs}
+        n_members = parquet_rows(ledger_path)
+        counts = {ix.count_key: n_members} if ix.count_key else {}
+        _update_manifest(data_dir, ix.name, rows=parquet_rows(path), **counts)
+    return n_members - n_before, n_members
+
+
+def append_documents_to_index(
+    spark: SparkSession, new_docs: DataFrame, data_dir: str
+) -> dict:
+    """Incremental full-text index maintenance through `_append`: append
+    the NEW (doc_id, text) documents' postings and set the manifest's
+    n_docs to the `fulltext_docs` ledger count — so a token-less document
+    is a member (its re-delivery is a no-op) and n_docs, idf's
+    denominator, is exact. Returns {"docs_appended", "n_docs"} (ledger
+    granularity)."""
+    appended, n_docs = _append(spark, FULLTEXT, new_docs, data_dir)
+    return {"docs_appended": appended, "n_docs": n_docs}
+
+
+def append_parts_to_trigram_index(
+    spark: SparkSession, new_parts: DataFrame, data_dir: str
+) -> dict:
+    """Incremental trigram-index maintenance through `_append`: the stored
+    rows carry only per-part state (n_trgm is local to its p_partkey), so
+    appending a fresh batch's postings is exact — |∩| and |∪| at probe
+    time see the new candidates immediately. First-wins on re-delivered
+    p_partkeys and on duplicates within one batch (two same-key rows would
+    otherwise double every posting, inflating |∩|), decided against the
+    `trigram_parts` ledger, so a part whose name yields no trigrams is
+    appended once. Returns {"parts_appended"}."""
+    appended, _ = _append(spark, TRIGRAM, new_parts, data_dir)
+    return {"parts_appended": appended}
 
 
 def _run_maintenance_stream(
@@ -456,185 +634,10 @@ def run_trigram_maintenance_stream(
     )
 
 
-TRIGRAM_INDEX = "trigram_index"
-#: optional probe-cost statistics beside the trigram index, both APPEND-ONLY
-#: ledgers (same dataflow as the postings): `trigram_stats` holds (trgm,
-#: df_inc) rows — a trigram's document frequency is the SUM of its rows —
-#: and `trigram_meta` holds (n_parts_inc, min_n_trgm) rows — corpus size is
-#: the sum, the corpus-wide minimum distinct-trigram count is the min.
-#: They exist solely for the max-df probe skip (`trigram_rank_maxdf`);
-#: when absent or stale the probe falls back to the full plan, so they are
-#: never a correctness dependency. Append ordering makes the guard SOUND
-#: under crashes: both ledger rows are written BEFORE the postings, so a
-#: crash in the window leaves min_n_trgm ≤ the true min (the guard's only
-#: soundness input) and df/n_parts inflated — inflation only shifts the
-#: hot/rare split and the fallback rate, never the served rows.
-TRIGRAM_STATS = "trigram_stats"
-TRIGRAM_META = "trigram_meta"
-#: max-df probe declines when the rare-candidate upper bound (Σ df of the
-#: rare query trigrams, from the stats ledger) exceeds this — the skip's
-#: semi-join force-broadcasts the candidate keys, and ~500k bigint keys is
-#: a conservative executor-memory-safe broadcast at any cluster size.
-MAXDF_BROADCAST_CAP = 500_000
-
-#: full-text analog of TRIGRAM_STATS: append-only (tok, df_inc, max_tf)
-#: ledger beside the full-text index, written BEFORE each postings append
-#: (same soundness argument — a crash inflates df/max_tf, and the max-df
-#: probe's exactness bound only uses max_tf as an UPPER bound on any
-#: indexed tf, so inflation can only cause declines, never wrong rows).
-#: Unlike the doc ledger this is NO membership authority: every value in
-#: it is derivable from the postings, so compaction REBUILDS it wholesale
-#: from the compacted index instead of folding rows — which also heals
-#: every torn/absent state for free. Optional perf structure: absent or
-#: unreadable ⇒ the probe declines to the plain index plan.
-FULLTEXT_STATS = "fulltext_stats"
-
-
-def build_trigram_index(
-    spark: SparkSession, sf_dir: str, out_dir: str, n_files: int = 8
-) -> int:
-    """Publish the pg_trgm-analog inverted index: one row per
-    (trgm, p_partkey) with the part's name and distinct-trigram count —
-    everything D6's Jaccard ranking needs. trgm-sorted layout for the
-    same row-group term pruning as the full-text index. Returns the
-    posting-row count."""
-    from australian_company_etl_spark.plans.api import _TRGM_EXPR
-
-    part = load_tables(spark, sf_dir, ["part"])["part"]
-    trg = part.select(
-        "p_partkey",
-        "p_name",
-        F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"),
-    ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
-    path = table_path(out_dir, TRIGRAM_INDEX)
-    # drop the probe-stat ledgers BEFORE overwriting the postings they
-    # describe — a crash then leaves them absent (probe declines), never
-    # stale over the new corpus (see build_fulltext_index)
-    for name in (TRIGRAM_STATS, TRIGRAM_META):
-        drop_dir(table_path(out_dir, name))
-    (
-        trg.repartitionByRange(n_files, "trgm")
-        .sortWithinPartitions("trgm")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _write_ledgers(out_dir, TRIGRAM_INDEX, read_parquet(spark, path))
-    return parquet_rows(path)
-
-
-def _ledger_frames(index_name: str, postings: DataFrame) -> dict[str, DataFrame]:
-    """{ledger name: the rows describing ``postings``, as the one file a
-    write adds} for each probe-stat ledger of ``index_name``
-    (FULLTEXT_STATS; TRIGRAM_STATS, TRIGRAM_META)."""
-    if index_name == FULLTEXT_INDEX:
-        return {
-            FULLTEXT_STATS: _one_sorted_file(
-                postings.groupBy("tok").agg(
-                    F.count("*").alias("df_inc"), F.max("tf").alias("max_tf")
-                ),
-                "tok",
-            )
-        }
-    return {
-        TRIGRAM_STATS: _one_sorted_file(
-            postings.groupBy("trgm").agg(F.count("*").alias("df_inc")), "trgm"
-        ),
-        TRIGRAM_META: postings.select("p_partkey", "n_trgm").distinct().agg(
-            F.count("*").alias("n_parts_inc"), F.min("n_trgm").alias("min_n_trgm")
-        ).coalesce(1),
-    }
-
-
-def _one_sorted_file(df: DataFrame, term_col: str) -> DataFrame:
-    """``df`` as one partition sorted by ``term_col``, so each ledger file
-    is term-sorted and its footer min/max stats confine a max-df decision's
-    driver-side read (`parquet_columns`) to the query terms' row groups."""
-    return df.coalesce(1).sortWithinPartitions(term_col)
-
-
-def _write_ledgers(data_dir: str, index_name: str, postings: DataFrame) -> None:
-    """Append a postings batch's ledger rows (creating those a build dropped)."""
-    for name, df in _ledger_frames(index_name, postings).items():
-        df.write.mode("append").parquet(table_path(data_dir, name))
-
-
-def append_parts_to_trigram_index(
-    spark: SparkSession, new_parts: DataFrame, data_dir: str
-) -> dict:
-    """Incremental trigram-index maintenance, mirror of
-    `append_documents_to_index`: the stored rows carry only per-part
-    state (n_trgm is local to its p_partkey), so appending a fresh
-    batch's postings is exact — |∩| and |∪| at probe time see the new
-    candidates immediately, existing rows never rewritten. First-wins on
-    re-delivered p_partkeys AND on duplicates within one batch (the
-    intra-batch dropDuplicates below — without it two same-key rows in a
-    batch would both survive the anti-join and double every posting,
-    inflating |∩| at probe time). Same lock discipline as the full-text
-    appender: membership read → write → manifest under `_index_lock`, so
-    a concurrent compaction swap cannot strand the appended files."""
-    from australian_company_etl_spark.plans.api import _TRGM_EXPR
-
-    path = table_path(data_dir, TRIGRAM_INDEX)
-    new_parts = new_parts.dropDuplicates(["p_partkey"])
-    with _index_lock(path):
-        heal_swap(path)
-        indexed = read_parquet(spark, path).select("p_partkey").distinct()
-        # persisted: the count and the batch postings below read the
-        # anti-join once (the emptiness check first: over the cache it
-        # costs a re-delivered batch one job fewer than a count)
-        fresh = new_parts.join(indexed, "p_partkey", "left_anti").persist()
-        try:
-            n_new = 0 if fresh.isEmpty() else fresh.count()
-            if n_new:
-                trg = fresh.select(
-                    "p_partkey",
-                    "p_name",
-                    F.explode(F.expr(_TRGM_EXPR.format(c="p_name"))).alias("trgm"),
-                ).withColumn("n_trgm", F.count("*").over(Window.partitionBy("p_partkey")))
-                # local persist (not the query-scoped tracker — this is a
-                # maintenance job): the batch postings feed up to three writes,
-                # and the meta/stats ledgers must describe the SAME rows as the
-                # postings append
-                trg = trg.persist()
-                try:
-                    # a batch can yield ZERO postings (every fresh name empty of
-                    # alphanumerics): such parts never enter the index, and the
-                    # ledger writes must be skipped with the postings — a
-                    # zero-row batch's meta agg still emits one (0, NULL) row,
-                    # and NULL min_n_trgm rows poison every later ledger read
-                    if not trg.isEmpty():
-                        # probe-stat ledgers are maintained only for snapshots
-                        # that have them (older postings-only snapshots keep
-                        # working; the max-df probe just falls back there). BOTH
-                        # ledgers are written BEFORE the postings: (a) soundness
-                        # — a crash then leaves min_n_trgm ≤ the true min and
-                        # df/n_parts inflated, and neither inflated value can
-                        # break exactness (the df split only picks WHICH
-                        # trigrams probe; the guard uses min_n) — and (b)
-                        # mechanics — appending to the postings path invalidates
-                        # every cached plan that scans it, including this batch
-                        # (its anti-join reads the index), so a ledger write
-                        # issued afterwards would recompute against the
-                        # post-append index and see an empty batch.
-                        ledgers = (TRIGRAM_STATS, TRIGRAM_META)
-                        if all(os.path.exists(table_path(data_dir, n)) for n in ledgers):
-                            _write_ledgers(data_dir, TRIGRAM_INDEX, trg)
-                        trg.repartitionByRange(2, "trgm").sortWithinPartitions(
-                            "trgm"
-                        ).write.mode("append").parquet(path)
-                finally:
-                    trg.unpersist()
-        finally:
-            fresh.unpersist()
-        _update_manifest(data_dir, TRIGRAM_INDEX, rows=parquet_rows(path))
-    return {"parts_appended": n_new}
-
-
 def compact_index(
     spark: SparkSession,
     data_dir: str,
     index_name: str,
-    key_col: str,
     n_files: int = 8,
 ) -> dict:
     """Restore an append-maintained serving index to fully-sorted layout —
@@ -642,12 +645,15 @@ def compact_index(
     batch lands as its own small term-sorted files; probes stay correct
     (footer stats prune per file) but file count and per-term file touches
     grow with every batch. This rewrites the whole index as ``n_files``
-    range-partitioned, key-sorted files — one contiguous key range per
-    file, the original build's layout — and swaps it in ONLY after the
-    re-read digest (rows + order-insensitive content hash, the
-    A9/compact_dataset discipline) proves the rewrite lost nothing; a
-    failed compaction can never replace a good index. Works for both the
-    full-text (key ``tok``) and trigram (key ``trgm``) indexes.
+    range-partitioned files sorted by the index's term column (``tok`` or
+    ``trgm``) — one contiguous term range per file, the original build's
+    layout — and swaps it in ONLY after the re-read digest (rows +
+    order-insensitive content hash, the A9/compact_dataset discipline)
+    proves the rewrite lost nothing; a failed compaction can never
+    replace a good index. Its ledgers grow one file per append too: the
+    membership ledger gets the same digest-verified rewrite and swap
+    (`_compact_ledger`), the probe-stat ledgers are rebuilt from the
+    compacted postings (`_rebuild_stats`).
 
     CONCURRENCY: safe to run alongside the appenders/maintenance streams
     (the documented cron pairing). The rewrite reads an explicit
@@ -661,6 +667,7 @@ def compact_index(
     import glob
     import shutil
 
+    ix = _INDEXES[index_name]
     path = table_path(data_dir, index_name)
     # COMPACTION flock (distinct from the appender lock), held across the
     # whole rewrite+verify+swap: two compactions of one index share the
@@ -688,8 +695,8 @@ def compact_index(
 
         tmp = path.rstrip("/") + REWRITE
         (
-            src.repartitionByRange(n_files, key_col)
-            .sortWithinPartitions(key_col)
+            src.repartitionByRange(n_files, ix.term_col)
+            .sortWithinPartitions(ix.term_col)
             .write.mode("overwrite")
             .parquet(tmp)
         )
@@ -718,43 +725,27 @@ def compact_index(
             "rows": expected[0],
             "ok": True,
         }
-        if index_name == TRIGRAM_INDEX:
-            # the probe-stat ledgers grow one tiny file per append and are
-            # fully derivable from the postings — rebuild them from the
-            # compacted index (fold + heal + migration in one move); under
-            # the index lock so a concurrent append can't interleave
-            with _index_lock(path, timeout=600.0):
-                out["ledgers"] = _rebuild_stats(spark, data_dir, TRIGRAM_INDEX)
-        if index_name == FULLTEXT_INDEX:
-            # the doc ledger grows one file per append too; same
-            # digest-verified rewrite+swap, under the index lock (the
-            # ledger is docs-scale — orders smaller than the postings
-            # rewrite above — so holding the lock through it is cheap
-            # relative to the compaction itself). Unlike the probe-stat
-            # ledgers this one is a MEMBERSHIP AUTHORITY (token-less docs
-            # live only here), hence the full digest/swap/heal discipline
-            # rather than a lossy-tolerant overwrite.
-            with _index_lock(path, timeout=600.0):
-                out["ledger"] = _compact_fulltext_ledger(spark, data_dir, n_files)
-                # the probe-stat ledger is fully derivable from the postings,
-                # so compaction REBUILDS it from the compacted index — the
-                # fold and the heal in one move (crash-inflated df/max_tf
-                # from append windows converge back to exact counts here)
-                stats = _rebuild_stats(spark, data_dir, FULLTEXT_INDEX)
-                out["stats"] = {"rows": stats[FULLTEXT_STATS]}
+        # the ledgers, under the index lock so a concurrent append can't
+        # interleave: they are ids-scale and terms-scale — orders smaller
+        # than the postings rewrite above — so holding the lock through
+        # them is cheap relative to the compaction itself
+        with _index_lock(path, timeout=600.0):
+            out["ledger"] = _compact_ledger(spark, table_path(data_dir, ix.members), n_files)
+            out["ledgers"] = _rebuild_stats(spark, data_dir, ix)
     return out
 
 
-def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -> dict:
-    """Digest-verified rewrite of the fulltext doc ledger (caller holds the
-    index lock and the compaction flock). Appenders and make_server heal a
-    mid-swap crash exactly like the index's (they must — a missing ledger
-    would otherwise trigger the postings backfill, which cannot represent
-    token-less documents)."""
+def _compact_ledger(spark: SparkSession, ledger_path: str, n_files: int) -> dict:
+    """Digest-verified rewrite of a membership ledger, if it exists (caller
+    holds the index lock and the compaction flock). Unlike the probe-stat
+    ledgers it is a MEMBERSHIP AUTHORITY (term-less rows live only here),
+    hence the full digest/swap/heal discipline rather than a rebuild.
+    Appenders and make_server heal a mid-swap crash exactly like the
+    index's (they must — a missing ledger would otherwise trigger the
+    postings backfill, which cannot represent term-less rows)."""
     import glob
     import shutil
 
-    ledger_path = table_path(data_dir, FULLTEXT_DOCS)
     heal_swap(ledger_path, clean_tmp=True)
     if not os.path.isdir(ledger_path):
         return {"ledger": "absent"}
@@ -777,13 +768,13 @@ def _compact_fulltext_ledger(spark: SparkSession, data_dir: str, n_files: int) -
     }
 
 
-def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
-    """Compaction-time wholesale REBUILD of an index's probe-stat ledgers:
-    `_ledger_frames` over the whole (just-compacted) postings. The rebuild
-    is both the fold and the heal: torn, absent and crash-inflated states
-    all converge to exact values here, and pre-stats snapshots gain the
-    ledgers at their first compaction. Caller holds the index lock (no
-    concurrent appender can write ledger rows the swap would drop).
+def _rebuild_stats(spark: SparkSession, data_dir: str, ix: _Index) -> dict:
+    """Compaction-time wholesale REBUILD of an index's probe-stat ledgers
+    from the whole (just-compacted) postings. The rebuild is both the fold
+    and the heal: torn, absent and crash-inflated states all converge to
+    exact values here, and pre-stats snapshots gain the ledgers at their
+    first compaction. Caller holds the index lock (no concurrent appender
+    can write ledger rows the swap would drop).
 
     Each ledger is dropped (`drop_dir`) before its rebuild is renamed in,
     so every crash state leaves it exact or ABSENT — absent makes the
@@ -792,12 +783,12 @@ def _rebuild_stats(spark: SparkSession, data_dir: str, index_name: str) -> dict:
     under-counted max_tf (or raised min_n_trgm) breaks the max-df guard's
     soundness (ledger max_tf ≥ every indexed tf, min_n_trgm ≤ the true
     minimum). Returns {ledger: rows}."""
-    idx = read_parquet(spark, table_path(data_dir, index_name))
+    idx = read_parquet(spark, table_path(data_dir, ix.name))
     out = {}
-    for name, df in _ledger_frames(index_name, idx).items():
+    for name, rows in ix.stats.items():
         path = table_path(data_dir, name)
         tmp = path.rstrip("/") + ".rebuilding"
-        df.write.mode("overwrite").parquet(tmp)
+        rows(idx).write.mode("overwrite").parquet(tmp)
         out[name] = parquet_rows(tmp)
         drop_dir(path)
         swap_in(tmp, path)
@@ -1522,23 +1513,21 @@ def make_server(spark: SparkSession, data_dir: str, port: int = 0) -> ThreadingH
     Startup first heals any compaction that died mid-swap (a missing live
     index directory with the data stranded in ``.precompact``) so probes
     never 500 against a half-swapped index."""
-    # each healed path is guarded by the lock its SWAPPER holds: the doc
-    # ledger is swapped by _compact_fulltext_ledger under the fulltext
-    # INDEX lock, so healing it under a fulltext_docs lock of its own
-    # would let this startup heal roll back a LIVE ledger compaction
-    # between its two renames (the live compactor holds only the index
-    # lock, which a ledger-path lock would not contend with)
-    for idx, lock_owner in (
-        (FULLTEXT_INDEX, FULLTEXT_INDEX),
-        (FULLTEXT_DOCS, FULLTEXT_INDEX),
-        (TRIGRAM_INDEX, TRIGRAM_INDEX),
-    ):
-        p = table_path(data_dir, idx)
-        if os.path.exists(p) or os.path.exists(p.rstrip("/") + BACKUP):
+    # each healed path is guarded by the lock its SWAPPER holds: a
+    # membership ledger is swapped by _compact_ledger under its INDEX lock,
+    # so healing it under a ledger lock of its own would let this startup
+    # heal roll back a LIVE ledger compaction between its two renames (the
+    # live compactor holds only the index lock, which a ledger-path lock
+    # would not contend with)
+    for ix in _INDEXES.values():
+        for name in (ix.name, ix.members):
+            p = table_path(data_dir, name)
+            if not (os.path.exists(p) or os.path.exists(p.rstrip("/") + BACKUP)):
+                continue
             try:
                 # under the lock: a live compaction mid-swap must not see
                 # its .precompact rolled back between its two renames
-                with _index_lock(table_path(data_dir, lock_owner)):
+                with _index_lock(table_path(data_dir, ix.name)):
                     heal_swap(p)
             except OSError as exc:
                 # read-only snapshot mount: the lock file cannot be created
@@ -1553,7 +1542,7 @@ def make_server(spark: SparkSession, data_dir: str, port: int = 0) -> ThreadingH
                     raise
                 warnings.warn(
                     f"snapshot dir not writable ({exc}); skipping startup "
-                    f"compaction heal for {idx}",
+                    f"compaction heal for {name}",
                     RuntimeWarning,
                     stacklevel=2,
                 )

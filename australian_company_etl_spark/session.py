@@ -115,12 +115,6 @@ def get_spark(
         )
         .config("spark.sql.legacy.sizeOfNull", "false")
     )
-    # diagnostics-only escape hatch (r12 setsim GC probe): extra driver JVM
-    # flags (e.g. -Xlog:gc*) — must be set before the gateway JVM launches,
-    # so an env var, not a SparkConf mutation after getOrCreate.
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

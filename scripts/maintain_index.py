@@ -11,9 +11,11 @@ dataflows against a live snapshot directory —
     python scripts/maintain_index.py stream --data-dir SNAP \
         --landing DIR --checkpoint DIR
 
-    # restore an index to fully-sorted layout (digest-verified swap)
+    # restore an index and its ledgers to fully-sorted layout
+    # (digest-verified swap); --index fulltext_index or trigram_index,
+    # each sorted by its own term column
     python scripts/maintain_index.py compact --data-dir SNAP \
-        [--index fulltext_index --key tok] [--n-files 8]
+        [--index fulltext_index] [--n-files 8]
 
 All three are idempotent: re-delivered batches append nothing, a restarted
 stream resumes after its committed files, and a failed compaction never
@@ -54,7 +56,6 @@ def main() -> int:
     c = sub.add_parser("compact", help="restore an index to sorted layout")
     c.add_argument("--data-dir", required=True)
     c.add_argument("--index", default="fulltext_index")
-    c.add_argument("--key", default="tok")
     c.add_argument("--n-files", type=int, default=8)
 
     args = p.parse_args()
@@ -79,9 +80,7 @@ def main() -> int:
             )
         }
     else:
-        out = http_api.compact_index(
-            spark, args.data_dir, args.index, args.key, n_files=args.n_files
-        )
+        out = http_api.compact_index(spark, args.data_dir, args.index, n_files=args.n_files)
     print(json.dumps(out, sort_keys=True))
     return 0
 

@@ -109,6 +109,74 @@ def test_knn_graph_arrow_equals_fold_on_crafted_corpus(spark, crafted_dir):
     assert null_scores, "crafted corpus should produce NULL-score edges"
 
 
+def _canon(rows) -> list[tuple]:
+    """Rows with every NaN score spelled "nan" (NaN != NaN), sorted."""
+    return sorted(
+        tuple("nan" if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in rows
+    )
+
+
+@pytest.fixture(scope="module")
+def nonfinite_dir(spark, tmp_path_factory):
+    """Corpus with a NaN-component and an inf-component embedding (both
+    normalize to a vector holding NaN, so every dot with them is NaN and
+    Spark ranks it above every real score), a zero vector (normalizes to
+    NULL) and ordinary vectors."""
+    d = tmp_path_factory.mktemp("knn_nonfinite")
+    rng = np.random.default_rng(11)
+    rows = [(vid, "l", rng.standard_normal(64).tolist()) for vid in range(40)]
+    rows.append((40, "nan", [float("nan")] + [1.0] * 63))
+    rows.append((41, "inf", [float("inf")] + [1.0] * 63))
+    rows.append((42, "zero", [0.0] * 64))
+    spark.createDataFrame(
+        rows, "vec_id long, label string, embedding array<double>"
+    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
+    return str(d)
+
+
+def test_knn_graph_arrow_equals_fold_on_nonfinite_vectors(spark, nonfinite_dir):
+    """The kernel must rank NaN scores as the fold does: a NaN neighbour
+    first for every vertex of its bucket, and a NaN vertex keeping its
+    K NaN neighbours. Before, the per-bucket prune dropped NaN scores
+    (a NaN kth kept nothing) and Arrow turned the rest into NULL."""
+    from australian_company_etl_spark.plans.similarity import (
+        knn_graph_lsh_planes,
+        knn_graph_lsh_planes_fold,
+        knn_planes,
+    )
+
+    for n_planes in (2, 8):
+        pl = knn_planes(n_planes)
+        exp = _canon(knn_graph_lsh_planes_fold(spark, nonfinite_dir, pl).collect())
+        got = _canon(knn_graph_lsh_planes(spark, nonfinite_dir, pl).collect())
+        assert got == exp
+        assert [r for r in exp if r[2] == "nan"], "corpus should produce NaN edges"
+        assert {r[0] for r in exp} >= {40, 41}
+
+
+def test_knn_kernel_keeps_nan_apart_from_null_in_a_mixed_bucket():
+    """With a NULL vector in the bucket (the path that does not prune) a
+    NaN dot stays NaN and only pairs with the NULL vector are NULL."""
+    import pandas as pd
+
+    from australian_company_etl_spark.plans.similarity import _knn_cogroup_score
+
+    vecs = {1: [1.0, 0.0], 2: [0.6, 0.8], 3: [float("nan"), 0.0], 4: None}
+    ldf = pd.DataFrame({"src_id": list(vecs), "se": list(vecs.values())})
+    rdf = pd.DataFrame({"nbr_id": list(vecs), "ne": list(vecs.values())})
+    out = _knn_cogroup_score(None, ldf, rdf)
+    dot = {(s, n): d for s, n, d in zip(out["src_id"], out["nbr_id"], out["dot"])}
+    assert len(dot) == 12  # every ordered pair but the self-pairs
+    for (s, n), d in dot.items():
+        if 4 in (s, n):
+            assert d is pd.NA
+        elif 3 in (s, n):
+            assert math.isnan(d)
+        else:
+            assert d == 0.6
+
+
 def test_knn_graph_probed_arrow_equals_union_of_probe_buckets(spark, sf_dir):
     """The probed variant must equal scoring each vertex against the UNION
     of its own and probe buckets — built here from the fold formulation's

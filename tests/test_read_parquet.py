@@ -97,16 +97,18 @@ def test_parquet_rows_equals_a_spark_count(spark, tmp_path):
     """`registry.parquet_rows` sums the footers of exactly the files Spark
     reads, with no Spark job: it equals `read_parquet(...).count()` on a
     flat directory, a `key=value`-partitioned one, after an append and
-    after a `compact_index` swap. `_SUCCESS`, `.crc` and a
+    after a `compact_index` swap of a small full-text index that took two
+    appends. `_SUCCESS`, `.crc` and a
     `_common_metadata` summary (here a copy of a data file, so counting it
     would show) are not counted. `registry.parquet_columns` reads the same
     files, with and without a filter, also with no Spark job."""
     import glob
+    import json
     import shutil
 
     from pyspark.sql import functions as F
 
-    from australian_company_etl_spark.serving.http_api import compact_index
+    from australian_company_etl_spark.serving import http_api as api
 
     flat = table_path(str(tmp_path), "flat")
     spark.range(100).repartition(3).write.parquet(flat)
@@ -117,14 +119,14 @@ def test_parquet_rows_equals_a_spark_count(spark, tmp_path):
     assert os.path.exists(os.path.join(flat, "_SUCCESS"))
     assert glob.glob(os.path.join(flat, ".*.crc"))
 
-    def same_count(path: str, rows: int) -> None:
+    def same_count(path: str, rows: int, col: str = "id") -> None:
         assert spark_jobs(spark, lambda: registry.parquet_rows(path)) == []
         assert registry.parquet_rows(path) == read_parquet(spark, path).count() == rows
         # `parquet_columns` reads the same files, also with no Spark job
-        assert spark_jobs(spark, lambda: registry.parquet_columns(path, ["id"])) == []
-        ids = sorted(registry.parquet_columns(path, ["id"]).column("id").to_pylist())
-        assert ids == sorted(r.id for r in read_parquet(spark, path).select("id").collect())
-        some = registry.parquet_columns(path, ["id"], registry.where_in("id", [3, 5]))
+        assert spark_jobs(spark, lambda: registry.parquet_columns(path, [col])) == []
+        ids = sorted(registry.parquet_columns(path, [col]).column(col).to_pylist())
+        assert ids == sorted(r[col] for r in read_parquet(spark, path).select(col).collect())
+        some = registry.parquet_columns(path, [col], registry.where_in(col, [3, 5]))
         assert some.num_rows == ids.count(3) + ids.count(5) > 0
 
     same_count(flat, 100)
@@ -132,14 +134,22 @@ def test_parquet_rows_equals_a_spark_count(spark, tmp_path):
     spark.range(100, 107).write.mode("append").parquet(flat)
     same_count(flat, 107)
 
-    d = str(tmp_path)
-    toy = table_path(d, "toy")
-    for lo in (0, 30, 60):
-        spark.range(lo, lo + 30).withColumn("tok", F.col("id") % 7).write.mode(
-            "append"
-        ).parquet(toy)
-    assert compact_index(spark, d, "toy", "tok", n_files=2)["ok"]
-    same_count(toy, 90)
+    # two distinct tokens per document: 90 documents hold 180 postings
+    docs = spark.range(90).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.concat(F.lit("w"), F.col("id") % 7), F.concat(F.lit("x"), "id"))
+        .alias("text"),
+    )
+    corpus, d = str(tmp_path / "corpus"), str(tmp_path / "snap")
+    docs.filter(F.col("doc_id") < 30).write.parquet(table_path(corpus, "documents"))
+    os.makedirs(d)
+    with open(os.path.join(d, api.MANIFEST), "w") as f:
+        json.dump({api.FULLTEXT_INDEX: api.build_fulltext_index(spark, corpus, d, n_files=2)}, f)
+    for lo in (30, 60):
+        batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 30))
+        api.append_documents_to_index(spark, batch, d)
+    assert api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)["ok"]
+    same_count(table_path(d, api.FULLTEXT_INDEX), 180, "doc_id")
 
 
 @pytest.mark.parametrize("when", ["listing", "footer"])

@@ -526,7 +526,7 @@ def test_index_compaction_restores_sorted_layout(spark, tmp_path):
     frag_files = len(glob.glob(os.path.join(idx_path, "*.parquet")))
     assert frag_files > 8  # appends fragmented the build layout
 
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"] and out["files_before"] == frag_files and out["files_after"] == 8
     # every file now holds one contiguous key range (fully-sorted layout)
     ranges = []
@@ -687,7 +687,7 @@ def test_failed_index_compaction_never_replaces_the_live_index(spark, tmp_path, 
 
     monkeypatch.setattr(api, "_table_digest", corrupted)
     with pytest.raises(RuntimeError, match="compaction dropped data"):
-        api.compact_index(spark, d, "fulltext_index", "tok")
+        api.compact_index(spark, d, "fulltext_index")
     assert sorted(glob.glob(os.path.join(idx_path, "*.parquet"))) == files_before
     assert not os.path.exists(idx_path + ".compacting")
     assert not os.path.exists(idx_path + ".precompact")
@@ -765,7 +765,7 @@ def test_compact_carries_concurrent_append_into_new_layout(spark, tmp_path, monk
         return real_digest(df)
 
     monkeypatch.setattr(api, "_table_digest", inject_append_on_verify)
-    out = api.compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = api.compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"] and out["delta_carried"] >= 1
     assert len(glob.glob(os.path.join(idx_path, "*.parquet"))) == 8 + out["delta_carried"]
     ids = {
@@ -950,7 +950,7 @@ def test_second_compactor_fails_fast_and_cannot_corrupt(spark, tmp_path):
     with _index_lock(idx_path + ".compact", timeout=0.3):
         t0 = time.monotonic()
         with pytest.raises(TimeoutError, match="live process"):
-            compact_index(spark, d, "fulltext_index", "tok")
+            compact_index(spark, d, "fulltext_index")
         assert time.monotonic() - t0 < 10  # fail-fast, not the 600s queue
         # the loser did NOTHING: live index intact, no tmp rewrite started
         assert spark.read.parquet(idx_path).count() == n_before
@@ -958,7 +958,7 @@ def test_second_compactor_fails_fast_and_cannot_corrupt(spark, tmp_path):
         assert not os.path.exists(idx_path + ".precompact")
 
     # with the first compactor gone, compaction proceeds normally
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"]
     assert len(glob.glob(os.path.join(idx_path, "*.parquet"))) == 8
     assert spark.read.parquet(idx_path).count() == n_before
@@ -1061,7 +1061,7 @@ def test_kill9_compactor_mid_swap_appender_wins_and_index_converges(spark, tmp_p
         from australian_company_etl_spark.session import get_spark
         from australian_company_etl_spark.serving.http_api import compact_index
         spark = get_spark(app_name="kill9-compactor")
-        compact_index(spark, d, "fulltext_index", "tok")
+        compact_index(spark, d, "fulltext_index")
         """
     )
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
@@ -1110,7 +1110,7 @@ def test_kill9_compactor_mid_swap_appender_wins_and_index_converges(spark, tmp_p
 
     # a later compaction reclaims the orphaned rewrite and the index
     # converges to exactly base ∪ batch: digest equals a from-scratch build
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"]
     got = _table_digest(spark.read.parquet(idx_path))
 
@@ -1399,6 +1399,7 @@ def test_trigram_ledger_compaction_folds_and_preserves_probe(spark, tmp_path):
 
     from australian_company_etl_spark.serving.http_api import (
         TRIGRAM_META,
+        TRIGRAM_PARTS,
         TRIGRAM_STATS,
         append_parts_to_trigram_index,
         build_trigram_index,
@@ -1422,16 +1423,26 @@ def test_trigram_ledger_compaction_folds_and_preserves_probe(spark, tmp_path):
     stats_path = table_path(d, TRIGRAM_STATS)
     files_before = len(glob.glob(os.path.join(stats_path, "*.parquet")))
     assert files_before >= 4  # build + three appends
+    # the part ledger: a backfill at the first append, then one per append
+    parts_files = len(glob.glob(os.path.join(table_path(d, TRIGRAM_PARTS), "*.parquet")))
+    assert parts_files >= 4
 
     from australian_company_etl_spark.plans.api import TRGM_QUERY, TRGM_TOPK
 
     before = trigram_rank_maxdf(spark, d, TRGM_QUERY, TRGM_TOPK)
 
-    out = compact_index(spark, d, "trigram_index", "trgm", n_files=4)
+    out = compact_index(spark, d, "trigram_index", n_files=4)
     assert out["ok"]
     led = out["ledgers"]
     assert led["trigram_meta"] == 1 and led["trigram_stats"] > 0
     assert len(glob.glob(os.path.join(stats_path, "*.parquet"))) == 1
+    # the part ledger is compacted too, losing no member
+    assert out["ledger"]["rows"] == part.count()
+    assert out["ledger"]["files_before"] == parts_files > out["ledger"]["files_after"]
+    ledger_ids = spark.read.parquet(table_path(d, TRIGRAM_PARTS)).collect()
+    assert sorted(r.p_partkey for r in ledger_ids) == sorted(
+        r.p_partkey for r in part.select("p_partkey").collect()
+    )
 
     # folded ledgers == postings ground truth
     postings = spark.read.parquet(table_path(d, "trigram_index"))
@@ -1492,7 +1503,7 @@ def test_fulltext_ledger_compaction_and_midswap_heal(spark, tmp_path):
     assert files_before >= 3  # build + two appends
     n_ledger = spark.read.parquet(ledger_path).count()
 
-    out = compact_index(spark, d, "fulltext_index", "tok", n_files=8)
+    out = compact_index(spark, d, "fulltext_index", n_files=8)
     assert out["ok"]
     assert out["ledger"]["rows"] == n_ledger
     assert out["ledger"]["files_after"] < files_before
@@ -1604,8 +1615,8 @@ def test_fulltext_maxdf_declines_without_stats_ledger(spark, tmp_path):
     rows, info = api.fulltext_rank_maxdf(spark, d, ["golden", "uid17"], 1, 60)
     assert rows is None and info["reason"] == "no stats ledger"
 
-    out = api.compact_index(spark, d, "fulltext_index", "tok", n_files=4)
-    assert out["ok"] and out["stats"]["rows"] > 0
+    out = api.compact_index(spark, d, "fulltext_index", n_files=4)
+    assert out["ok"] and out["ledgers"][api.FULLTEXT_STATS] > 0
     rows, info = api.fulltext_rank_maxdf(spark, d, ["golden", "uid17"], 1, 60)
     assert info["used"] and rows[0]["doc_id"] == 17
 
@@ -1800,8 +1811,8 @@ def test_fulltext_maxdf_survives_appends_and_compaction_rebuild(spark, tmp_path)
     ]
     assert before == full
 
-    out = api.compact_index(spark, d, "fulltext_index", "tok", n_files=4)
-    assert out["ok"] and out["stats"]["rows"] == len(truth)
+    out = api.compact_index(spark, d, "fulltext_index", n_files=4)
+    assert out["ok"] and out["ledgers"][api.FULLTEXT_STATS] == len(truth)
     assert len(glob.glob(os.path.join(stats_path, "*.parquet"))) == 1
     rebuilt = {
         r["tok"]: (int(r["df_inc"]), int(r["max_tf"]))
@@ -1938,7 +1949,7 @@ def test_trigram_rebuild_heals_corrupted_ledger_and_empty_batches(spark, tmp_pat
     spark.createDataFrame(
         [(60, 999_999)], "n_parts_inc bigint, min_n_trgm bigint"
     ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    out = api.compact_index(spark, d, "trigram_index", "trgm", n_files=4)
+    out = api.compact_index(spark, d, "trigram_index", n_files=4)
     assert out["ok"] and out["ledgers"]["trigram_meta"] == 1
     postings = spark.read.parquet(table_path(d, api.TRIGRAM_INDEX))
     true_min = (
@@ -1991,6 +2002,101 @@ def test_make_server_heals_ledger_under_index_lock(spark, tmp_path):
     # healed under the INDEX lock, not a ledger-path lock of its own
     assert os.path.exists(table_path(d, api.FULLTEXT_INDEX) + ".lock")
     assert not os.path.exists(ledger + ".lock")
+
+
+def _trgm_snapshot(spark, tmp_path) -> str:
+    """The crafted trigram corpus's index with its manifest entry."""
+    import json
+    import os
+
+    _corpus, d = _crafted_trgm_corpus(spark, tmp_path)
+    with open(os.path.join(d, "_SNAPSHOT.json"), "w") as f:
+        json.dump({"trigram_index": {"rows": 1}}, f)
+    return d
+
+
+def test_trigram_append_remembers_parts_without_trigrams(spark, tmp_path):
+    """A part whose name yields no trigrams never enters the postings, so
+    only the `trigram_parts` ledger can remember it: its re-delivery must
+    append nothing. The first append backfills the ledger from the
+    postings, so every indexed part is a member too."""
+    import os
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import table_path
+
+    d = _trgm_snapshot(spark, tmp_path)
+    ledger = table_path(d, api.TRIGRAM_PARTS)
+    assert not os.path.exists(ledger)  # the build publishes none
+    junk = spark.createDataFrame(
+        [(9001, "???"), (9002, "!!")], "p_partkey bigint, p_name string"
+    )
+    assert api.append_parts_to_trigram_index(spark, junk, d)["parts_appended"] == 2
+    assert api.append_parts_to_trigram_index(spark, junk, d)["parts_appended"] == 0
+    indexed = spark.read.parquet(table_path(d, api.TRIGRAM_INDEX)).select("p_partkey")
+    members = {r.p_partkey for r in spark.read.parquet(ledger).collect()}
+    assert members == {r.p_partkey for r in indexed.distinct().collect()} | {9001, 9002}
+
+
+def test_make_server_heals_trigram_parts_under_index_lock(spark, tmp_path):
+    """The trigram part ledger is swapped by compaction under the trigram
+    INDEX lock, like the full-text doc ledger: a crash between the swap's
+    two renames strands it in `.precompact`, and make_server must restore
+    it under that same lock, not one of its own."""
+    import os
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import table_path
+
+    d = _trgm_snapshot(spark, tmp_path)
+    none = spark.createDataFrame([], "p_partkey bigint, p_name string")
+    api.append_parts_to_trigram_index(spark, none, d)  # backfills the ledger
+    ledger = table_path(d, api.TRIGRAM_PARTS)
+    n = spark.read.parquet(ledger).count()
+    assert n == 60
+    os.rename(ledger, ledger + ".precompact")
+    for p in (ledger + ".lock", table_path(d, api.TRIGRAM_INDEX) + ".lock"):
+        if os.path.exists(p):
+            os.unlink(p)
+    srv = api.make_server(spark, d)
+    srv.server_close()
+    assert os.path.isdir(ledger) and not os.path.exists(ledger + ".precompact")
+    assert spark.read.parquet(ledger).count() == n
+    assert os.path.exists(table_path(d, api.TRIGRAM_INDEX) + ".lock")
+    assert not os.path.exists(ledger + ".lock")
+
+
+def test_maintain_index_compacts_trigram_index_by_its_own_term(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`scripts/maintain_index.py compact --index trigram_index` needs no
+    sort key: compaction takes it from the index (trgm here), and every
+    compacted file is trgm-sorted."""
+    import glob
+    import json
+    import sys
+
+    import pyarrow.parquet as pq
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import table_path
+    from scripts import maintain_index
+
+    d = _trgm_snapshot(spark, tmp_path)
+    batch = spark.createDataFrame(
+        [(500, "azure widget"), (501, "zinc bracket")], "p_partkey bigint, p_name string"
+    )
+    api.append_parts_to_trigram_index(spark, batch, d)
+    argv = ["maintain_index.py", "compact", "--data-dir", d, "--index", "trigram_index"]
+    monkeypatch.setattr(sys, "argv", argv + ["--n-files", "2"])
+    assert maintain_index.main() == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    path = table_path(d, api.TRIGRAM_INDEX)
+    assert out["ok"] and out["rows"] == spark.read.parquet(path).count()
+    assert out["ledger"]["rows"] == 62
+    for f in glob.glob(path + "/*.parquet"):
+        trgm = pq.read_table(f, columns=["trgm"]).column("trgm").to_pylist()
+        assert trgm == sorted(trgm)
 
 
 def test_maxdf_param_parsed_and_bounded(spark, tmp_path):
@@ -2145,7 +2251,7 @@ def test_search_after_append_and_compaction_equals_scan(spark, tmp_path):
         assert api.append_documents_to_index(spark, new, snap)["docs_appended"] > 0
         after_append = index_equals_scan()
         assert after_append != before
-        out = api.compact_index(spark, snap, api.FULLTEXT_INDEX, "tok")
+        out = api.compact_index(spark, snap, api.FULLTEXT_INDEX)
         assert out["ok"] and os.path.isdir(table_path(snap, api.FULLTEXT_INDEX))
         assert index_equals_scan() == after_append
     finally:

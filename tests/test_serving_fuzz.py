@@ -50,9 +50,11 @@ class CrashInjector:
         self.crash_at: int | None = None
         self.count = 0
         self.armed = False
+        #: the paths of every counted mutation since the last arm
+        self.hits: list[tuple] = []
 
     def arm(self, crash_at: int | None) -> None:
-        self.crash_at, self.count, self.armed = crash_at, 0, True
+        self.crash_at, self.count, self.armed, self.hits = crash_at, 0, True, []
 
     def disarm(self) -> None:
         self.armed = False
@@ -66,6 +68,7 @@ class CrashInjector:
         ):
             return
         self.count += 1
+        self.hits.append(paths)
         if self.crash_at is not None and self.count >= self.crash_at:
             raise SimulatedCrash(f"mutation {self.count}")
 
@@ -204,7 +207,7 @@ def test_appender_crash_at_every_mutation_boundary_heals(
             injector.disarm()
         # recovery protocol: re-deliver, then compact (rebuilds the stats)
         api.append_documents_to_index(spark, batch, d)
-        api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+        api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         got = _state_digest(spark, d)
         assert got == want, f"appender crash point {k} did not converge: {got}"
         if not crashed:
@@ -241,7 +244,7 @@ def test_compactor_crash_at_every_mutation_boundary_heals(
         injector.arm(crash_at=k)
         crashed = False
         try:
-            api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+            api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         except SimulatedCrash:
             crashed = True
         finally:
@@ -249,7 +252,7 @@ def test_compactor_crash_at_every_mutation_boundary_heals(
         # recovery: the appender heals interrupted swaps under its lock
         # (re-delivery of the same batch is a no-op append), then compact
         api.append_documents_to_index(spark, batch, d)
-        api.compact_index(spark, d, api.FULLTEXT_INDEX, "tok", n_files=2)
+        api.compact_index(spark, d, api.FULLTEXT_INDEX, n_files=2)
         got = _state_digest(spark, d)
         assert got == want, f"compactor crash point {k} did not converge: {got}"
         if not crashed:
@@ -281,6 +284,11 @@ def _trigram_state_digest(spark, d: str) -> dict:
     with open(os.path.join(d, "_SNAPSHOT.json")) as f:
         out["rows"] = json.load(f)["trigram_index"]["rows"]
     return out
+
+
+def _trigram_members(spark, d: str) -> list[int]:
+    path = table_path(d, api.TRIGRAM_PARTS)
+    return sorted(r.p_partkey for r in spark.read.parquet(path).collect())
 
 
 def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
@@ -315,7 +323,7 @@ def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
         json.dump({"trigram_index": {"rows": n_ref}}, f)
     # reference passes through one compaction so its meta ledger is the
     # same folded single-row shape recovery converges to
-    api.compact_index(spark, ref, api.TRIGRAM_INDEX, "trgm", n_files=2)
+    api.compact_index(spark, ref, api.TRIGRAM_INDEX, n_files=2)
     want = _trigram_state_digest(spark, ref)
 
     k, crash_points = 1, 0
@@ -325,15 +333,16 @@ def test_trigram_compactor_crash_at_every_mutation_boundary_heals(
         injector.arm(crash_at=k)
         crashed = False
         try:
-            api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+            api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         except SimulatedCrash:
             crashed = True
         finally:
             injector.disarm()
         api.append_parts_to_trigram_index(spark, batch, d)
-        api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+        api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         got = _trigram_state_digest(spark, d)
         assert got == want, f"trigram compactor crash point {k} did not converge: {got}"
+        assert _trigram_members(spark, d) == list(range(20)), f"crash point {k}"
         if not crashed:
             break
         crash_points += 1
@@ -462,14 +471,17 @@ def test_trigram_appender_crash_at_every_mutation_boundary_heals(
     """The trigram APPENDER's own enumeration (VERDICT r08 task 4 — until
     now it only ran as the recovery step inside the compactor test, so a
     crash INSIDE it was never exercised): crash before every snapshot-dir
-    mutation in append_parts_to_trigram_index — the two write-first ledger
-    appends, the postings append, the manifest dump + replace — then
-    re-deliver the batch (at-least-once) and compact. A crash between the
-    ledger writes and the postings append makes the re-delivered batch
-    look fresh (the anti-join reads the postings), double-appending ledger
-    rows — inflation the compaction's wholesale rebuild must fold back to
-    exact values. Postings, both ledgers, and the manifest row count must
-    equal the from-scratch build at every crash point."""
+    mutation in append_parts_to_trigram_index — the `trigram_parts`
+    backfill (the template has no part ledger) and its swap, the two
+    write-first probe-stat ledger appends, the postings append, the part
+    ledger append, the manifest dump + replace — then re-deliver the batch
+    (at-least-once) and compact. A crash between the probe-stat writes and
+    the postings append makes the re-delivered batch look fresh (neither
+    the part ledger nor the postings hold it), double-appending stat rows
+    — inflation the compaction's wholesale rebuild must fold back to exact
+    values. Postings, both probe-stat ledgers, the part ledger and the
+    manifest row count must equal the from-scratch build at every crash
+    point."""
     corpus = str(tmp_path / "parts")
     _mk_parts(spark, 0, 10).write.parquet(corpus + "/part.parquet")
     template = str(tmp_path / "template")
@@ -488,7 +500,7 @@ def test_trigram_appender_crash_at_every_mutation_boundary_heals(
         json.dump({"trigram_index": {"rows": n_ref}}, f)
     # recovery ends in a compaction, so the reference passes through one
     # too — its ledgers take the folded single-row shape recovery reaches
-    api.compact_index(spark, ref, api.TRIGRAM_INDEX, "trgm", n_files=2)
+    api.compact_index(spark, ref, api.TRIGRAM_INDEX, n_files=2)
     want = _trigram_state_digest(spark, ref)
 
     k, crash_points = 1, 0
@@ -504,15 +516,22 @@ def test_trigram_appender_crash_at_every_mutation_boundary_heals(
         finally:
             injector.disarm()
         api.append_parts_to_trigram_index(spark, batch, d)
-        api.compact_index(spark, d, api.TRIGRAM_INDEX, "trgm", n_files=2)
+        api.compact_index(spark, d, api.TRIGRAM_INDEX, n_files=2)
         got = _trigram_state_digest(spark, d)
         assert got == want, f"trigram appender crash point {k} did not converge: {got}"
+        assert _trigram_members(spark, d) == list(range(20)), f"crash point {k}"
         if not crashed:
             break
         crash_points += 1
         k += 1
-    # meta append + df-stats append + postings append + manifest publish
-    assert crash_points >= 4, f"only {crash_points} trigram appender boundaries found"
+    # the crash-free run passed the part ledger's backfill write, its swap
+    # into place and the batch's ledger append
+    ledger = table_path(d, api.TRIGRAM_PARTS)
+    backfill = ledger.rstrip("/") + ".compacting"
+    assert {(backfill,), (backfill, ledger), (ledger,)} <= set(injector.hits)
+    # backfill write + swap, meta + df-stats appends, postings append,
+    # part-ledger append, manifest dump + replace
+    assert crash_points >= 8, f"only {crash_points} trigram appender boundaries found"
 
 
 def test_trigram_rebuild_crash_at_every_mutation_boundary_heals(
@@ -615,14 +634,14 @@ def test_stats_rebuild_crash_mid_delete_leaves_no_partial_ledger(
     d = str(tmp_path / "snap")
     os.makedirs(d)
     if ledger == api.FULLTEXT_STATS:
-        index, key = api.FULLTEXT_INDEX, "tok"
+        index = api.FULLTEXT_INDEX
         corpus = str(tmp_path / "corpus")
         _mk_docs(spark, 0, 12).write.parquet(corpus + "/documents.parquet")
         manifest = {index: api.build_fulltext_index(spark, corpus, d, n_files=2)}
         append = api.append_documents_to_index
         batches = (_mk_docs(spark, 12, 18), _mk_docs(spark, 18, 24))
     else:
-        index, key = api.TRIGRAM_INDEX, "trgm"
+        index = api.TRIGRAM_INDEX
         corpus = str(tmp_path / "parts")
         _mk_parts(spark, 0, 10).write.parquet(corpus + "/part.parquet")
         manifest = {index: {"rows": api.build_trigram_index(spark, corpus, d)}}
@@ -639,7 +658,7 @@ def test_stats_rebuild_crash_mid_delete_leaves_no_partial_ledger(
 
     clean = str(tmp_path / "clean")
     shutil.copytree(d, clean)
-    api.compact_index(spark, clean, index, key, n_files=2)
+    api.compact_index(spark, clean, index, n_files=2)
     want = api._table_digest(spark.read.parquet(table_path(clean, ledger)))
 
     real_unlink = os.unlink
@@ -655,11 +674,11 @@ def test_stats_rebuild_crash_mid_delete_leaves_no_partial_ledger(
 
     monkeypatch.setattr(os, "unlink", unlink)
     with pytest.raises(_CrashInDelete):
-        api.compact_index(spark, d, index, key, n_files=2)
+        api.compact_index(spark, d, index, n_files=2)
     monkeypatch.setattr(os, "unlink", real_unlink)
 
     if os.path.exists(ledger_path):
         got = api._table_digest(spark.read.parquet(ledger_path))
         assert got == want, f"readable partial {ledger}: {got} != clean {want}"
-    api.compact_index(spark, d, index, key, n_files=2)
+    api.compact_index(spark, d, index, n_files=2)
     assert api._table_digest(spark.read.parquet(ledger_path)) == want
