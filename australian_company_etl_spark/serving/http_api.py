@@ -287,10 +287,14 @@ def _write_postings(ix: _Index, rows: DataFrame, out_dir: str, n_files: int) -> 
     makes the probe decline, and an absent membership ledger is
     backfilled by the next append from the postings — strictly better
     than a stale ledger asserting membership for ids the new postings no
-    longer contain. Returns the postings path."""
+    longer contain. A ``.precompact`` backup stranded by a crashed ledger
+    swap goes first: left behind, the next heal would restore it as the
+    ledger of the old corpus. Returns the postings path."""
     path = table_path(out_dir, ix.name)
     for name in (*ix.stats, ix.members):
-        drop_dir(table_path(out_dir, name))
+        p = table_path(out_dir, name)
+        drop_dir(p.rstrip("/") + BACKUP)
+        drop_dir(p)
     ix.postings(rows).repartitionByRange(n_files, ix.term_col).sortWithinPartitions(
         ix.term_col
     ).write.mode("overwrite").parquet(path)

@@ -39,6 +39,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    from australian_company_etl_spark.serving import http_api
+
     p = argparse.ArgumentParser(description=__doc__)
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -55,12 +57,11 @@ def main() -> int:
 
     c = sub.add_parser("compact", help="restore an index to sorted layout")
     c.add_argument("--data-dir", required=True)
-    c.add_argument("--index", default="fulltext_index")
+    c.add_argument("--index", default="fulltext_index", choices=sorted(http_api._INDEXES))
     c.add_argument("--n-files", type=int, default=8)
 
     args = p.parse_args()
 
-    from australian_company_etl_spark.serving import http_api
     from australian_company_etl_spark.session import get_spark
 
     spark = get_spark(app_name="aus-etl-maintain-index")

@@ -1978,8 +1978,9 @@ def test_trigram_bound_rounds_up_like_spark_not_half_even(spark):
 
 
 def test_make_server_heals_ledger_under_index_lock(spark, tmp_path):
-    """The fulltext doc ledger is swapped under the fulltext INDEX lock
-    (_compact_fulltext_ledger); the startup heal must take that same lock
+    """Both membership ledgers are swapped by `_compact_ledger` under the
+    owning index's lock (here the fulltext doc ledger under the fulltext
+    INDEX lock); the startup heal must take that same lock
     — a ledger-path lock of its own would not contend with a live ledger
     compaction and could roll back its mid-swap state (review finding)."""
     import os
@@ -2064,6 +2065,37 @@ def test_make_server_heals_trigram_parts_under_index_lock(spark, tmp_path):
     assert spark.read.parquet(ledger).count() == n
     assert os.path.exists(table_path(d, api.TRIGRAM_INDEX) + ".lock")
     assert not os.path.exists(ledger + ".lock")
+
+
+def test_rebuild_drops_a_stranded_trigram_parts_backup(spark, tmp_path):
+    """A crash between a ledger swap's two renames strands the old
+    `trigram_parts` in `.precompact`. A rebuild over a new corpus must drop
+    that backup too: otherwise the next append's heal restores it as the
+    new corpus's ledger, and a new part whose key the old corpus held is
+    taken for a member and never indexed."""
+    import os
+
+    from australian_company_etl_spark.serving import http_api as api
+    from australian_company_etl_spark.sources.registry import table_path
+
+    d = _trgm_snapshot(spark, tmp_path)
+    none = spark.createDataFrame([], "p_partkey bigint, p_name string")
+    api.append_parts_to_trigram_index(spark, none, d)  # backfills the ledger
+    ledger = table_path(d, api.TRIGRAM_PARTS)
+    os.rename(ledger, ledger + ".precompact")
+    corpus = str(tmp_path / "corpus2")
+    spark.createDataFrame(
+        [(100, "zinc bracket"), (101, "brass hinge")], "p_partkey bigint, p_name string"
+    ).write.parquet(corpus + "/part.parquet")
+    api.build_trigram_index(spark, corpus, d)
+    assert not os.path.exists(ledger + ".precompact")
+    # key 5 was a member of the old corpus, not of the new one
+    batch = spark.createDataFrame([(5, "azure widget")], "p_partkey bigint, p_name string")
+    assert api.append_parts_to_trigram_index(spark, batch, d)["parts_appended"] == 1
+    idx = spark.read.parquet(table_path(d, api.TRIGRAM_INDEX))
+    assert {r.p_partkey for r in idx.select("p_partkey").distinct().collect()} == {5, 100, 101}
+    members = {r.p_partkey for r in spark.read.parquet(ledger).collect()}
+    assert members == {5, 100, 101}
 
 
 def test_maintain_index_compacts_trigram_index_by_its_own_term(
